@@ -19,11 +19,13 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from spype_spark.session import scratch_root
+
 #: Default catalog namespace for bucketized tables. The explicit
 #: LOCATION matters: the default warehouse dir derives from the
-#: session's cwd, which may not be writable where a driver runs.
+#: session's cwd, which may not be writable where a driver runs; the
+#: default location is ``spype_bkt.db`` under :func:`scratch_root`.
 DEFAULT_DATABASE = "spype_bkt"
-DEFAULT_LOCATION = "/root/repo/.scratch/spype_bkt.db"
 
 
 def bucketize(
@@ -32,7 +34,7 @@ def bucketize(
     table: str,
     n_buckets: int = 8,
     database: str = DEFAULT_DATABASE,
-    location: str = DEFAULT_LOCATION,
+    location: str | None = None,
 ) -> str:
     """Materialize ``df`` as a bucketed+sorted catalog table on ``key``.
 
@@ -47,6 +49,7 @@ def bucketize(
     first — re-bucketizing is an overwrite, not an error.
     """
     spark = df.sparkSession
+    location = location or os.path.join(scratch_root(), "spype_bkt.db")
     os.makedirs(os.path.dirname(location), exist_ok=True)
     spark.sql(
         f"CREATE DATABASE IF NOT EXISTS {database} LOCATION '{location}'"

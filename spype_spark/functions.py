@@ -47,6 +47,9 @@ from spype_spark.ann import pq_codes, pq_encode
 # bucketed-table ops (pay-once clustered write / zero-Exchange joins)
 from spype_spark.bucketing import bucketed_join, bucketize
 
+# plan-only helpers (no Spark job while composing)
+from spype_spark.planning import lazy_checkpoint, plan_partitions
+
 # skew-handling patterns
 from spype_spark.skew import salted_agg, salted_join
 
@@ -120,10 +123,15 @@ def spread_small_scan(df: DataFrame, target: int | None = None) -> DataFrame:
     this is a NO-OP — no exchange is added, the 100 TB corpus is never
     re-shuffled. Callers pass the narrow projection (id + text), never
     the exploded rows, so the shuffle moves the small input once.
+
+    The partition count comes from the physical plan
+    (:func:`~spype_spark.planning.plan_partitions`), never from
+    ``df.rdd``: under AQE ``.rdd`` runs every upstream query stage, so
+    deciding the spread would execute the input while the caller is
+    still composing.
     """
-    sc = df.sparkSession.sparkContext
-    want = target or sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= want:
+    want = target or df.sparkSession.sparkContext.defaultParallelism
+    if plan_partitions(df) >= want:
         return df
     return df.repartition(want)
 
@@ -219,8 +227,8 @@ def minhash_candidates(
     # the whole query at sf0.1). The band table is n_docs × n_bands rows
     # of three longs — per-doc-signature-sized, far smaller than the
     # shingle stage it replaces, so it is the natural cut point at scale
-    # too (persist() on a cluster; localCheckpoint in local mode).
-    bands = bands.localCheckpoint(eager=False)
+    # too. The cut is lazy: composing this kernel runs no job.
+    bands = lazy_checkpoint(bands)
     bands = filter_oversized_buckets(
         bands, ["band_idx", "band_hash"], cap=bucket_cap
     )
@@ -257,12 +265,12 @@ def ngram_jaccard_pairs(
             F.explode(word_shingles(text_col, shingle_k)).alias("shingle"),
         )
         .distinct()
-        # three consumers (per-doc sizes + both join sides) would each
-        # re-run the explode+distinct without a cut point (r15 opt);
-        # the distinct shingle table IS the inverted index — the
-        # natural materialization at any scale
-        .localCheckpoint(eager=False)
     )
+    # three consumers (per-doc sizes + both join sides) would each
+    # re-run the explode+distinct without a cut point (r15 opt); the
+    # distinct shingle table IS the inverted index — the natural
+    # materialization at any scale
+    sh = lazy_checkpoint(sh)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -306,9 +314,7 @@ def near_dedup(
     version did exactly that — 11 s vs ~5 s at sf0.1, and the gap is
     the quadratic-vs-linear term, so it widens with scale).
     """
-    cand = minhash_candidates(df, id_col, text_col).localCheckpoint(
-        eager=False
-    )
+    cand = lazy_checkpoint(minhash_candidates(df, id_col, text_col))
     # restrict the verify universe to docs that appear in ANY candidate
     # pair — a broadcastable doc list, so the shingle table prunes with
     # a map-side semi join before anything shuffles
@@ -317,7 +323,7 @@ def near_dedup(
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    sh_c = (
+    sh_c = lazy_checkpoint(  # three consumers: sizes + 2 sides
         spread_small_scan(
             # prune to candidate docs BEFORE the shingle explode (the
             # semi join is on doc_id, so filtering first shingles only
@@ -331,7 +337,6 @@ def near_dedup(
             F.explode(word_shingles(text_col, 3)).alias("shingle"),
         )
         .distinct()
-        .localCheckpoint(eager=False)  # three consumers: sizes + 2 sides
     )
     sizes = sh_c.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh_c.select(F.col("doc_id").alias("doc_a"), "shingle")

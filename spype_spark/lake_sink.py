@@ -806,7 +806,7 @@ _DIFF_MAX_RANGE_BUCKETS = 4096
 def _plan_range_buckets(
     old_entries: list[dict],
     new_entries: list[dict],
-    phys_key: str,
+    key: str,
     total: int,
     bucket_bytes: int,
     ebytes,
@@ -825,11 +825,12 @@ def _plan_range_buckets(
     Row-level routing is on the key VALUE, identically on both sides,
     so full-key-equal rows always meet in one bucket and the diff's
     output is invariant to the routing (same argument as the hash
-    split)."""
+    split). ``key`` is the first key column's name as the entries'
+    stats are keyed: its logical name in the step's manifest."""
     import bisect
 
     def span(e):
-        st = (e.get("stats") or {}).get(phys_key)
+        st = (e.get("stats") or {}).get(key)
         if not st:
             return None
         mn, mx = st
@@ -844,7 +845,7 @@ def _plan_range_buckets(
             or all(isinstance(v, str) for v in (mn, mx))
         ):
             return None
-        nulls = (e.get("nulls") or {}).get(phys_key)
+        nulls = (e.get("nulls") or {}).get(key)
         return (mn, mx, ebytes(e), nulls)
 
     spans = []
@@ -1036,12 +1037,21 @@ def _plan_cdf_step(
         )
         # key-range routing first (r16): clustered layouts get buckets
         # whose file lists are bounded by range intersection instead of
-        # every bucket re-reading every touched file
+        # every bucket re-reading every touched file. Entry stats are
+        # keyed by LOGICAL name as of the manifest listing them (written
+        # localized; a rename rekeys every carried entry), so the key is
+        # looked up by its name in THIS version's schema — never by its
+        # physical name, which after a rename plus reuse of the old
+        # name is ANOTHER column's stats key (routing by that envelope
+        # dropped rows from the feed). A file without stats under that
+        # name sends the whole step to the hash split.
         inv_rename = {v2: k2 for k2, v2 in rename.items()}
+        phys_key = inv_rename.get(keys[0], keys[0])
+        step_names = {mlog.phys(f): f["name"] for f in cur["schema"]["fields"]}
         rb = _plan_range_buckets(
             removed + affected,
             added + affected,
-            inv_rename.get(keys[0], keys[0]),
+            step_names.get(phys_key, keys[0]),
             total,
             bucket_bytes,
             ebytes,

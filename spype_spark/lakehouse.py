@@ -123,6 +123,12 @@ _VERSION_RE = re.compile(r"^v=(\d+)$")
 # real deployments tune it the way Delta tunes its retention period.
 DEFAULT_GC_GRACE_SECONDS = 600.0
 
+#: Column layout of a positional deletion-vector file (written by
+#: :func:`_m_dv_plan`). Reads pass it explicitly: inferring it would cost
+#: one Spark job per DV group on every read of a table with DVs.
+_DV_SCHEMA = "fname string, pos long"
+
+
 
 class ConstraintViolation(ValueError):
     """A mutation tried to write rows for which a table CHECK
@@ -1557,7 +1563,7 @@ def _m_apply_deletes(
         pd_here = [d for d in pdels if d["seq"] > s]
         if pd_here:
             df = _read(groups[s], with_pos=True)
-            dv = spark.read.parquet(
+            dv = spark.read.schema(_DV_SCHEMA).parquet(
                 *[os.path.join(path, d["path"]) for d in pd_here]
             ).select(
                 F.col("fname").alias("__fname"), F.col("pos").alias("__pos")
@@ -4265,7 +4271,7 @@ def _m_apply_deletes_pos(
         df = _m_open_files(spark, path, groups[s], m["schema"], with_pos=True)
         pd_here = [d for d in pdels if d["seq"] > s]
         if pd_here:
-            dv = spark.read.parquet(
+            dv = spark.read.schema(_DV_SCHEMA).parquet(
                 *[os.path.join(path, d["path"]) for d in pd_here]
             ).select(
                 F.col("fname").alias("__fname"), F.col("pos").alias("__pos")

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spype_spark.ann import _dot_hof, _normalize
+from spype_spark.planning import lazy_checkpoint
 from spype_spark.registry import query
 from spype_spark.tables import load_table
 
@@ -214,17 +215,19 @@ def kmeans_assign(
     )
     # the k-row norm column stays on the JVM fold (_dot_hof): it is the
     # oracle's exact expression and costs k rows, not n.
-    n1 = c1.select(
-        "cell_id",
-        "cent",
-        F.sqrt(_dot_hof(F.col("cent"), F.col("cent"))).alias("nrm"),
     # k rows. Cut the lineage (r15 opt): round 2 consumes n1 through
     # TWO branches (cents + norms), each of which would otherwise
     # embed the whole round-1 GEMM + centroid-update subtree — the
     # final plan ran the round-1 assignment twice and the plan carried
     # 3 MapInPandas GEMM passes for a 2-round Lloyd. With the cut the
     # executed work is exactly one GEMM per round.
-    ).localCheckpoint(eager=False)
+    n1 = lazy_checkpoint(
+        c1.select(
+            "cell_id",
+            "cent",
+            F.sqrt(_dot_hof(F.col("cent"), F.col("cent"))).alias("nrm"),
+        )
+    )
 
     # round 2: cosine against the updated (non-unit) centroids.
     a2 = centroid_assign(
@@ -298,7 +301,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from spype_spark.ann import cell_pairs_threshold
 
-    a2 = kmeans_assign(spark, sf_dir).localCheckpoint(eager=False)
+    a2 = lazy_checkpoint(kmeans_assign(spark, sf_dir))
     # pair stage: one self-GEMM per cell (Σ|cell|² numpy work, never a
     # per-pair HOF fold); only above-threshold (u < v) pairs come back.
     dropped = (

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spype_spark.planning import lazy_checkpoint
 from spype_spark.registry import query
 from spype_spark.tables import load_table
 
@@ -174,7 +175,10 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
-    edges = (
+    # materialize once (lazily, at the action): three self-join aliases
+    # would otherwise each re-run the fact-table joins that derived the
+    # edge list
+    edges = lazy_checkpoint(
         li.join(s, s.s_suppkey == li.l_suppkey)
         .join(o, o.o_orderkey == li.l_orderkey)
         .join(c, c.c_custkey == o.o_custkey)
@@ -186,9 +190,6 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
-        # materialize once: three self-join aliases would otherwise each
-        # re-run the fact-table joins that derived the edge list
-        .localCheckpoint(eager=True)
     )
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")

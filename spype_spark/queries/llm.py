@@ -22,6 +22,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spype_spark.planning import lazy_checkpoint
 from spype_spark.registry import query
 from spype_spark.tables import load_table
 
@@ -146,10 +147,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact-Jaccard reference feeds both the anti-join and the
     # inventory aggregate: checkpoint so the posting-list join runs
     # once (r15 opt; high-pair list is audit-sized)
-    high = (
+    high = lazy_checkpoint(
         ngram_jaccard_pairs(d, min_jaccard=0.5)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
     )
     missing = high.join(cand, ["doc_a", "doc_b"], "left_anti")
     stats = high.agg(
@@ -451,9 +451,11 @@ def lsh_ann_topk(e: DataFrame, k: int = 3, n: int | None = None) -> DataFrame:
     # vector evaluate once, not once per join side (same cut-point
     # rationale as minhash_candidates). Results are identical: the
     # pair set is unchanged and dot is a function of the pair.
-    sig = lsh_band_signatures(
-        e, lsh_planes_per_band(e.count() if n is None else n)
-    ).localCheckpoint(eager=False)
+    sig = lazy_checkpoint(
+        lsh_band_signatures(
+            e, lsh_planes_per_band(e.count() if n is None else n)
+        )
+    )
     pairs = (
         sig.select(F.col("vec_id").alias("src_id"), "band", "bucket")
         .join(

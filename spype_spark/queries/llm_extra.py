@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spype_spark.queries.llm import COSINE_TOP5_ORACLE as _COSINE_TOP5_ORACLE
+from spype_spark.planning import lazy_checkpoint
 from spype_spark.registry import query
 from spype_spark.tables import load_table
 
@@ -242,15 +243,14 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (anti-join + count): checkpoint both so the kernel join and the
     # text self-join run once, not twice (r15 opt; both frames are
     # pair-list-sized, bounded by the selectivity gate)
-    cand = _simhash_candidates(spark, sf_dir).localCheckpoint(eager=False)
+    cand = lazy_checkpoint(_simhash_candidates(spark, sf_dir))
     doc = load_table(spark, sf_dir, "documents")
     a = doc.select(F.col("doc_id").alias("doc_a"), "text")
     b = doc.select(F.col("doc_id").alias("doc_b"), "text")
-    dup = (
+    dup = lazy_checkpoint(
         a.join(b, "text")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
     )
     missing = dup.join(cand, ["doc_a", "doc_b"], "left_anti")
     dup_stats = dup.agg(
@@ -317,9 +317,9 @@ def _simhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation (42 parquet scans in the audit plan) without a cut
     # point. n_docs × 3 small cols — the same signature-sized cut as
     # minhash_candidates.
-    sig = sig.select(
-        "doc_id", lo.alias("band_lo"), hi.alias("band_hi")
-    ).localCheckpoint(eager=False)
+    sig = lazy_checkpoint(
+        sig.select("doc_id", lo.alias("band_lo"), hi.alias("band_hi"))
+    )
     from spype_spark.queries.llm import filter_oversized_buckets
 
     pairs = None

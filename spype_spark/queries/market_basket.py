@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spype_spark.planning import lazy_checkpoint
 from spype_spark.registry import query
 from spype_spark.tables import load_table
 
@@ -83,11 +84,10 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exchanges); now every consumer reads the checkpointed per-basket
     # item arrays (n_orders rows, ≤25 items each). Pair multiset is
     # identical: sorted distinct items, x<y pairs once per basket.
-    baskets = (
+    baskets = lazy_checkpoint(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy(F.col("l_orderkey").alias("basket"))
         .agg(F.sort_array(F.collect_set(F.col("p_brand"))).alias("items"))
-        .localCheckpoint(eager=False)
     )
     nb = baskets.agg(F.count(F.lit(1)).cast("bigint").alias("n_baskets"))
     supp = (

@@ -13,7 +13,6 @@ stores scaled longs, not doubles).
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 
@@ -22,6 +21,7 @@ from pyspark.sql import functions as F
 
 from spype_spark.queries._util import D_FMT_SPARK
 from spype_spark.registry import query
+from spype_spark.session import scratch_root
 from spype_spark.tables import load_table
 
 
@@ -63,8 +63,7 @@ def q_rollup_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     straight to days and expect a hash match with the
     rollup-roundtripped answer.
     """
-    os.makedirs("/root/repo/.scratch", exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="spype_rollup_", dir="/root/repo/.scratch")
+    tmp = tempfile.mkdtemp(prefix="spype_rollup_", dir=scratch_root())
     try:
         path = f"{tmp}/events_hourly"
         hourly_rollup(spark, sf_dir).write.mode("overwrite").parquet(path)

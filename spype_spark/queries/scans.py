@@ -8,7 +8,6 @@ plans add partition pruning for free once tables are date-partitioned.
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 
@@ -17,6 +16,7 @@ from pyspark.sql import functions as F
 
 from spype_spark.queries._util import dstr, dsum, dsum_sql, ts_lit
 from spype_spark.registry import query
+from spype_spark.session import scratch_root
 from spype_spark.tables import load_table
 
 
@@ -92,8 +92,7 @@ def q_sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_quantity") >= 25)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
     )
-    os.makedirs("/root/repo/.scratch", exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="spype_roundtrip_", dir="/root/repo/.scratch")
+    tmp = tempfile.mkdtemp(prefix="spype_roundtrip_", dir=scratch_root())
     path = f"{tmp}/lineitem_filtered"
     try:
         out.write.mode("overwrite").parquet(path)

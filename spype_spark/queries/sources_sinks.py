@@ -19,12 +19,12 @@ from pyspark.sql import functions as F
 
 from spype_spark.layout import morton2, morton2_sql
 from spype_spark.registry import query
+from spype_spark.session import scratch_root
 from spype_spark.tables import load_table
 
 
 def _scratch(prefix: str) -> str:
-    os.makedirs("/root/repo/.scratch", exist_ok=True)
-    return tempfile.mkdtemp(prefix=prefix, dir="/root/repo/.scratch")
+    return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
 
 
 @query(

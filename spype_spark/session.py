@@ -49,6 +49,18 @@ _RUNTIME_CONFS = {
 }
 
 
+def scratch_root() -> str:
+    """Scratch dir for checkpoints, spills and round-trip writes:
+    ``$SPYPE_SCRATCH`` when set, else ``.scratch/`` at the root of the
+    checkout this package was imported from (gitignored). Created on
+    demand."""
+    root = os.environ.get("SPYPE_SCRATCH") or os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+    )
+    os.makedirs(root, exist_ok=True)
+    return root
+
+
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine confs to an externally-owned session."""
     import warnings

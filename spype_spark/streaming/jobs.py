@@ -22,23 +22,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spype_spark.queries._util import TS_FMT_SPARK
-from spype_spark.session import ensure_session_confs
-from spype_spark.tables import normalize_events_ts
+from spype_spark.session import ensure_session_confs, scratch_root
+from spype_spark.tables import normalize_events_ts, read_parquet
 
 
 def _events_batch(spark: SparkSession, path: str) -> DataFrame:
     """Batch-read an events Parquet file/dir with the session confs the
     corpus may require (nanosAsLong for the legacy NANOS encoding)."""
     ensure_session_confs(spark)
-    return spark.read.parquet(path)
-
-
-def _scratch_root() -> str:
-    """Scratch dir for checkpoints/spills — created on demand (a fresh
-    checkout has no .scratch/: it is gitignored)."""
-    root = os.environ.get("SPYPE_SCRATCH", "/root/repo/.scratch")
-    os.makedirs(root, exist_ok=True)
-    return root
+    return read_parquet(spark, path)
 
 
 def _events_stream(
@@ -137,7 +129,7 @@ def _run_available_now_with_watermark(
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
         with tempfile.TemporaryDirectory(
-            prefix="spype_ckpt_", dir=_scratch_root()
+            prefix="spype_ckpt_", dir=scratch_root()
         ) as ckpt:
             q = (
                 sdf.writeStream.format("memory")
@@ -339,7 +331,7 @@ def run_stream_foreach_batch_sink(
         )
 
     with tempfile.TemporaryDirectory(
-        prefix="spype_ckpt_", dir=_scratch_root()
+        prefix="spype_ckpt_", dir=scratch_root()
     ) as ckpt:
         q = (
             ev.writeStream.foreachBatch(write_batch)
@@ -370,7 +362,7 @@ def run_stream_rollup_maintenance(
     is a no-op) so AvailableNow drains in ~``n_splits`` epochs, each
     appending its own partial partition.
     """
-    split_dir = tempfile.mkdtemp(prefix="spype_events_split_", dir=_scratch_root())
+    split_dir = tempfile.mkdtemp(prefix="spype_events_split_", dir=scratch_root())
     ensure_session_confs(spark)
 
     def write_partials(batch_df: DataFrame, epoch_id: int) -> None:
@@ -403,7 +395,7 @@ def run_stream_rollup_maintenance(
             spark, split_dir, glob="*.parquet", max_files_per_trigger=1
         )
         with tempfile.TemporaryDirectory(
-            prefix="spype_ckpt_", dir=_scratch_root()
+            prefix="spype_ckpt_", dir=scratch_root()
         ) as ckpt:
             q = (
                 ev.writeStream.foreachBatch(write_partials)
@@ -443,8 +435,8 @@ def run_stream_lake_upsert(
     from spype_spark import lakehouse as lake
 
     ensure_session_confs(spark)
-    split_dir = tempfile.mkdtemp(prefix="spype_cdc_split_", dir=_scratch_root())
-    tbl_dir = tempfile.mkdtemp(prefix="spype_cdc_tbl_", dir=_scratch_root())
+    split_dir = tempfile.mkdtemp(prefix="spype_cdc_split_", dir=scratch_root())
+    tbl_dir = tempfile.mkdtemp(prefix="spype_cdc_tbl_", dir=scratch_root())
     tbl = f"{tbl_dir}/user_latest"
     try:
         (
@@ -483,7 +475,7 @@ def run_stream_lake_upsert(
                 )
 
         with tempfile.TemporaryDirectory(
-            prefix="spype_ckpt_", dir=_scratch_root()
+            prefix="spype_ckpt_", dir=scratch_root()
         ) as ckpt:
             q = (
                 ev.writeStream.foreachBatch(upsert_batch)
@@ -527,8 +519,8 @@ def run_stream_live_ingest(
     prove the data really arrived incrementally.
     """
     ensure_session_confs(spark)
-    staging = tempfile.mkdtemp(prefix="spype_live_stage_", dir=_scratch_root())
-    landing = tempfile.mkdtemp(prefix="spype_live_land_", dir=_scratch_root())
+    staging = tempfile.mkdtemp(prefix="spype_live_stage_", dir=scratch_root())
+    landing = tempfile.mkdtemp(prefix="spype_live_land_", dir=scratch_root())
     name = "spype_stream_live_ingest"
     try:
         (
@@ -557,7 +549,7 @@ def run_stream_live_ingest(
             ),
         )
         with tempfile.TemporaryDirectory(
-            prefix="spype_ckpt_", dir=_scratch_root()
+            prefix="spype_ckpt_", dir=scratch_root()
         ) as ckpt:
             q = (
                 agg.writeStream.format("memory")
@@ -755,8 +747,8 @@ def run_stream_txn_sink(
     from spype_spark.catalog import Catalog
 
     ensure_session_confs(spark)
-    split_dir = tempfile.mkdtemp(prefix="spype_txn_split_", dir=_scratch_root())
-    cat_dir = tempfile.mkdtemp(prefix="spype_txn_cat_", dir=_scratch_root())
+    split_dir = tempfile.mkdtemp(prefix="spype_txn_split_", dir=scratch_root())
+    cat_dir = tempfile.mkdtemp(prefix="spype_txn_cat_", dir=scratch_root())
     app = "events_txn_sink"
     try:
         (
@@ -827,7 +819,7 @@ def run_stream_txn_sink(
                 spark, split_dir, glob="*.parquet", max_files_per_trigger=1
             )
             with tempfile.TemporaryDirectory(
-                prefix="spype_ckpt_", dir=_scratch_root()
+                prefix="spype_ckpt_", dir=scratch_root()
             ) as ckpt:
                 q = (
                     ev.writeStream.foreachBatch(sink_batch)

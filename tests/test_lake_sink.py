@@ -1182,6 +1182,58 @@ def test_cdf_rewrite_range_buckets_bound_reads_and_match(reg, tmp_path):
     assert rows(tot // 4) == rows(1 << 40)
 
 
+def test_cdf_range_buckets_after_rename_and_name_reuse(reg, tmp_path):
+    """Range routing must read the KEY's stats. After renaming the key
+    k -> kk and adding a new column named k, the key's physical name
+    (k) is the new column's stats key; routing files by that column's
+    envelope filtered every changed row out of its bucket, and the
+    feed silently came back empty."""
+    from spype_spark.lake_sink import _cdf_head_rename, _plan_cdf_step
+
+    p = str(tmp_path / "t")
+    df = reg.range(4000).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("g")
+    )
+    lake.write_table(df, p, partition_by=[("truncate", 500, "k")])
+    lake.rename_columns(reg, p, {"k": "kk"})
+
+    def rows_with_new_k(step, g):
+        # the reused name holds the key reversed: a clustered column
+        # whose envelope never matches the key's
+        return reg.range(0, 4000, step).select(
+            F.col("id").alias("kk"), g.alias("g"), (3999 - F.col("id")).alias("k")
+        )
+
+    lake.merge_upsert(
+        reg, p, rows_with_new_k(1, F.col("id") % 7), ["kk"], evolve_schema=True
+    )
+    v = lake.merge_upsert(reg, p, rows_with_new_k(3, F.col("id") + 1000), ["kk"])
+    ents = mlog.m_entries(p, mlog.m_load(p, v))
+    tot = sum(e.get("bytes", 0) for e in ents)
+    parts = _plan_cdf_step(p, v, ["kk"], _cdf_head_rename(p), bucket_bytes=tot // 4)
+    assert len(parts) > 1 and all(pt.bounds is not None for pt in parts), (
+        "the renamed key's own stats keep the range route"
+    )
+
+    got = sorted(
+        tuple(r)
+        for r in reg.read.format("spype_lake")
+        .option("path", p)
+        .option("readChangeFeed", "true")
+        .option("keys", "kk")
+        .option("startingVersion", v)
+        .option("diffBucketBytes", tot // 4)
+        .load()
+        .select("kk", "g", "_change_type")
+        .collect()
+    )
+    exp = sorted(
+        [(k, k % 7, "update_preimage") for k in range(0, 4000, 3)]
+        + [(k, 1000 + k, "update_postimage") for k in range(0, 4000, 3)]
+    )
+    assert got == exp
+
+
 def test_cdf_range_bucket_planner_units(reg, tmp_path):
     """_plan_range_buckets unit invariants: null-carrying files join
     bucket 0, heavy overlap / float stats / missing stats fall back to

@@ -883,6 +883,20 @@ def test_grouping_sets_empty_input_divergence(spark, orders, duck):
     assert duck.sql(q.format(t="orders")).fetchall() == [(None, 0)]
 
 
+def test_approx_distinct_on_empty_lineitem_is_zero(spark, tmp_path):
+    """q_agg_approx_distinct over an EMPTY lineitem: both distinct
+    counts are 0 and both error-bound flags hold (a zero sketch of an
+    empty table is exact), never NULL — the single-scan shape's final
+    max(when(...)) aggregates see no rows at all."""
+    from spype_spark.queries import REGISTRY
+
+    spark.read.parquet(f"{SF}/lineitem.parquet").limit(0).write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    got = REGISTRY["q_agg_approx_distinct"].fn(spark, str(tmp_path)).collect()
+    assert [tuple(r) for r in got] == [(0, True, 0, True)]
+
+
 @settings(
     max_examples=10,
     deadline=None,

@@ -352,11 +352,11 @@ def test_watermark_bounds_state_store_under_churn(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from spype_spark.streaming.jobs import _scratch_root
+    from spype_spark.session import scratch_root
     from spype_spark.tables import load_table
 
     n_files = 6
-    staging = tempfile.mkdtemp(prefix="spype_churn_", dir=_scratch_root())
+    staging = tempfile.mkdtemp(prefix="spype_churn_", dir=scratch_root())
     # watermarks require TIMESTAMP (with-local-tz), not TIMESTAMP_NTZ
     ev = load_table(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts"), "event_type"
@@ -392,7 +392,7 @@ def test_watermark_bounds_state_store_under_churn(spark, sf_dir):
         .agg(F.count("*").alias("n"))
     )
     with tempfile.TemporaryDirectory(
-        prefix="spype_ckpt_", dir=_scratch_root()
+        prefix="spype_ckpt_", dir=scratch_root()
     ) as ckpt:
         q = (
             stream.writeStream.format("memory")
@@ -527,11 +527,11 @@ def test_dedup_within_watermark_state_evicted_under_churn(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from spype_spark.streaming.jobs import _scratch_root
+    from spype_spark.session import scratch_root
     from spype_spark.tables import load_table
 
     n_files = 12
-    staging = tempfile.mkdtemp(prefix="spype_dchurn_", dir=_scratch_root())
+    staging = tempfile.mkdtemp(prefix="spype_dchurn_", dir=scratch_root())
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts")
     )
@@ -553,7 +553,7 @@ def test_dedup_within_watermark_state_evicted_under_churn(spark, sf_dir):
     )
     peak_state = 0
     with tempfile.TemporaryDirectory(
-        prefix="spype_ckpt_", dir=_scratch_root()
+        prefix="spype_ckpt_", dir=scratch_root()
     ) as ckpt:
         q = (
             stream.writeStream.format("memory")

@@ -9,6 +9,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from spype_spark.tables import BROADCAST_DIMS, TABLES, load_table, load_tables
+from tests.test_compose_jobs import jobs_composing
 
 
 def test_events_ts_matches_duckdb_to_the_microsecond(spark, sf_dir):
@@ -86,3 +87,34 @@ def test_events_stream_reader_matches_batch_loader(spark, sf_dir):
 def test_broadcast_dims_are_small(spark, sf_dir):
     for name in BROADCAST_DIMS:
         assert load_table(spark, sf_dir, name).count() <= 20_000
+
+
+def test_schema_memo_serves_repeat_loads_and_follows_rewrites(spark, tmp_path):
+    """load_table infers a file's schema once per session and reads
+    through the memo afterwards (no job); rewriting the file with a
+    different schema changes its stamp, so the next load sees the new
+    columns and values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    again = lambda: load_table(spark, str(tmp_path), "t")  # noqa: E731
+    assert jobs_composing(spark, "memo-again", again) == [], (
+        "a memo hit must not run an inference job"
+    )
+
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_schema_memo_skips_directories(spark, tmp_path):
+    """A directory (a partitioned table) is inferred on every load: its
+    listing can change without the directory's own stamp changing."""
+    spark.range(3).write.parquet(str(tmp_path / "d.parquet"))
+    load = lambda: load_table(spark, str(tmp_path), "d")  # noqa: E731
+    assert load().columns == ["id"]
+    assert jobs_composing(spark, "memo-dir", load) != []

@@ -37,12 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from spype_spark.session import get_spark  # noqa: E402
-
-
-def _scratch_root() -> str:
-    os.makedirs("/root/repo/.scratch", exist_ok=True)
-    return "/root/repo/.scratch"
+from spype_spark.session import get_spark, scratch_root  # noqa: E402
 
 
 def drive(
@@ -78,7 +73,7 @@ def drive(
     out = src.dropDuplicates(["key"])
     progress: list[dict] = []
     with tempfile.TemporaryDirectory(
-        prefix=f"spype_heavy_{provider}_", dir=_scratch_root()
+        prefix=f"spype_heavy_{provider}_", dir=scratch_root()
     ) as ckpt:
         q = (
             out.writeStream.format("noop")

@@ -35,11 +35,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from spype_spark.session import get_spark  # noqa: E402
+from spype_spark.session import get_spark, scratch_root  # noqa: E402
 from spype_spark.streaming.jobs import (  # noqa: E402
     _events_batch,
     _events_stream,
-    _scratch_root,
 )
 
 
@@ -63,8 +62,8 @@ def drive(spark, sf_dir: str, n_files: int, profile: str,
         )
     else:
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    staging = tempfile.mkdtemp(prefix="spype_churn_stage_", dir=_scratch_root())
-    landing = tempfile.mkdtemp(prefix="spype_churn_land_", dir=_scratch_root())
+    staging = tempfile.mkdtemp(prefix="spype_churn_stage_", dir=scratch_root())
+    landing = tempfile.mkdtemp(prefix="spype_churn_land_", dir=scratch_root())
     name = f"spype_churn_{profile}"
     progress = []
     try:
@@ -92,7 +91,7 @@ def drive(spark, sf_dir: str, n_files: int, profile: str,
             )
             mode = "append"
         with tempfile.TemporaryDirectory(
-            prefix="spype_ckpt_", dir=_scratch_root()
+            prefix="spype_ckpt_", dir=scratch_root()
         ) as ckpt:
             q = (
                 out.writeStream.format("noop")
