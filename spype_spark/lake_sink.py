@@ -642,31 +642,6 @@ CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
 
 
-def _cdf_recs(path: str, m: dict) -> list[dict]:
-    """Delete-state descriptors of one manifest: absolute sidecar
-    path + kind (``eq`` equality-delete keys / ``pos`` positional DV)
-    + the commit seq the sequence rule filters by."""
-    recs = []
-    for d in m.get("deletes") or []:
-        recs.append(
-            {
-                "path": os.path.join(path, d["path"]),
-                "kind": "eq",
-                "keys": list(d["keys"]),
-                "seq": int(d["seq"]),
-            }
-        )
-    for d in m.get("pos_deletes") or []:
-        recs.append(
-            {
-                "path": os.path.join(path, d["path"]),
-                "kind": "pos",
-                "seq": int(d["seq"]),
-            }
-        )
-    return recs
-
-
 def _resolve_eq_keys(path: str, recs: list[dict], rename: dict) -> None:
     """Rekey each equality-delete record's ``keys`` from their
     DELETE-TIME logical names (which the sidecar parquet's columns
@@ -950,35 +925,25 @@ def _plan_cdf_step(
                 f"derived; restart the stream from a retained version"
             ) from None
         prev_entries = mlog.m_entries(path, prev)
-        prev_recs = _cdf_recs(path, prev)
+        prev_recs = mlog.m_delete_recs(path, prev)
         _resolve_eq_keys(path, prev_recs, rename)
     cur_entries = mlog.m_entries(path, cur)
-    cur_recs = _cdf_recs(path, cur)
+    cur_recs = mlog.m_delete_recs(path, cur)
     _resolve_eq_keys(path, cur_recs, rename)
-    prev_by = {e["path"]: e for e in prev_entries}
-    cur_by = {e["path"]: e for e in cur_entries}
-    added = [e for p, e in cur_by.items() if p not in prev_by]
-    removed = [e for p, e in prev_by.items() if p not in cur_by]
-    kept = [e for p, e in cur_by.items() if p in prev_by]
-
-    def appl(recs: list[dict], e: dict) -> list[dict]:
-        s = int(e.get("seq", 0))
-        return [r for r in recs if r["seq"] > s]
+    removed, added, affected = mlog.m_step_files(
+        path, prev_entries, prev_recs, cur_entries, cur_recs
+    )
 
     def rec_ids(recs: list[dict]) -> set[str]:
         return {r["path"] for r in recs}
 
-    affected = [
-        e
-        for e in kept
-        if rec_ids(appl(prev_recs, e)) != rec_ids(appl(cur_recs, e))
-    ]
     # resurrection guard: a kept file LOSING an applicable delete
-    # record without being rewritten would bring rows back to life —
-    # no engine verb does this (compaction materializes deletes into
-    # rewritten files), so it joins the key-diff path, never a mask
+    # record without being rewritten brings rows back to life — a
+    # RESTORE to a version before the delete does this — so it joins
+    # the key-diff path, never a mask
     shrink_only = all(
-        rec_ids(appl(prev_recs, e)) <= rec_ids(appl(cur_recs, e))
+        rec_ids(mlog.m_applicable(prev_recs, e))
+        <= rec_ids(mlog.m_applicable(cur_recs, e))
         for e in affected
     )
 
@@ -1001,11 +966,19 @@ def _plan_cdf_step(
                 f"(keys must be unique per row, as in table_diff)"
             )
         old_side = [
-            (abs_of(e), _rel_fname(abs_of(e)), appl(prev_recs, e))
+            (
+                abs_of(e),
+                _rel_fname(abs_of(e)),
+                mlog.m_applicable(prev_recs, e),
+            )
             for e in removed + affected
         ]
         new_side = [
-            (abs_of(e), _rel_fname(abs_of(e)), appl(cur_recs, e))
+            (
+                abs_of(e),
+                _rel_fname(abs_of(e)),
+                mlog.m_applicable(cur_recs, e),
+            )
             for e in added + affected
         ]
         if not new_side:
@@ -1105,13 +1078,17 @@ def _plan_cdf_step(
                 rename,
                 file=abs_of(e),
                 rel=_rel_fname(abs_of(e)),
-                base_recs=appl(cur_recs, e),
+                base_recs=mlog.m_applicable(cur_recs, e),
             )
         )
     for e in affected:
-        base = appl(prev_recs, e)
+        base = mlog.m_applicable(prev_recs, e)
         base_ids = rec_ids(base)
-        new = [r for r in appl(cur_recs, e) if r["path"] not in base_ids]
+        new = [
+            r
+            for r in mlog.m_applicable(cur_recs, e)
+            if r["path"] not in base_ids
+        ]
         parts.append(
             _LakeCDFPartition(
                 "mask",

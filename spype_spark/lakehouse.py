@@ -99,11 +99,13 @@ from spype_spark.manifest_log import (  # noqa: F401  (historical aliases)
     _SLAB_MAX_GROUPS,
     ConcurrentWriteError,
     col_map as _col_map,
+    m_delete_recs as _m_delete_recs,
     m_entries as _m_entries,
     m_file_stats as _m_file_stats,
     m_load as _m_load,
     m_path as _m_path,
     m_publish as _m_publish,
+    m_step_files as _m_step_files,
     m_versions as _m_versions,
     phys as _phys,
     usable_stat_pair as _usable_stat_pair,
@@ -113,6 +115,7 @@ from spype_spark.bloom import (
     bloom_build as _bloom_build,
     bloom_might_contain as _bloom_might_contain,
 )
+from spype_spark.planning import lazy_checkpoint
 
 _VERSION_RE = re.compile(r"^v=(\d+)$")
 
@@ -1541,7 +1544,11 @@ def _m_apply_deletes(
     from pyspark.sql.types import StructType
 
     if not entries:
-        return spark.createDataFrame([], StructType.fromJson(m["schema"]))
+        # limit(0): an empty relation the optimizer answers (and prunes
+        # joins against) without launching a job
+        return spark.createDataFrame(
+            [], StructType.fromJson(m["schema"])
+        ).limit(0)
     dels = m.get("deletes", [])
     pdels = m.get("pos_deletes", [])
     cols = [f["name"] for f in m["schema"]["fields"]]
@@ -2183,7 +2190,17 @@ def _m_merge_plan(
     and :class:`spype_spark.catalog.Transaction` (base = the version
     the catalog's snapshot resolves, which may be older than the
     table directory's newest slot). Returns
-    ``(merged_df, carry_entries, pcols)`` for the caller to commit."""
+    ``(merged_df, carry_entries, pcols)`` for the caller to commit.
+
+    The source is evaluated ONCE (Delta's ``merge.materializeSource``):
+    the prune pass (partition tuples, key ranges, Bloom probe values)
+    and the write (the union and anti-join build side of the upsert,
+    or the full-clause join) all read one materialized copy, cut by
+    the first action. Besides the repeated work this saves, it keeps a
+    nondeterministic source consistent: the write can never meet a
+    key the prune pass did not see, whose file would then be carried
+    and the key duplicated."""
+    updates = lazy_checkpoint(updates)
     m = _m_load(path, base)
     pcols = m.get("partition_by")
     # tgt is built LAZILY (r15 opt): the pruned paths below replace it
@@ -3696,7 +3713,11 @@ def merge(
     so every file rewrites — the same full-table cost Delta pays for
     ``whenNotMatchedBySource``; partition-restrict the TARGET first
     (filter into a staging table, or run per-partition merges) when
-    that matters at 100 TB."""
+    that matters at 100 TB.
+
+    On a manifest table the source is evaluated once per MERGE, as
+    Delta's ``merge.materializeSource`` does: pruning and the write
+    read one materialized copy (see :func:`_m_merge_plan`)."""
     _validate_merge_clauses(
         when_matched,
         matched_condition,
@@ -3775,6 +3796,11 @@ def merge_upsert(
     NULL), columns only in the target persist (update rows get NULL).
     Off by default: silent widening is how typo'd column names corrupt
     a table. (Mutually exclusive with ``match_condition``.)
+
+    On a manifest table ``updates`` is evaluated once per MERGE, as
+    Delta's ``merge.materializeSource`` does: the prune pass and the
+    write read one materialized copy (see :func:`_m_merge_plan`), so an
+    expensive or nondeterministic source runs once.
     """
     if evolve_schema and match_condition is not None:
         raise ValueError("match_condition with evolve_schema is unsupported")
@@ -4565,6 +4591,47 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
     )
 
 
+def _m_diff_sides(
+    spark: SparkSession, path: str, v_from: int, v_to: int
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a manifest-table diff, each reading only the
+    entries that can hold a change (:func:`manifest_log.m_step_files`):
+    ``v_from``'s removed entries and ``v_to``'s added ones, plus, on
+    both sides, the kept entries whose applicable delete records
+    differ, each side under its own manifest's delete records. A kept
+    entry with the same records holds the same live rows on both sides
+    and, keys being unique, pairs only with itself: it drops out.
+
+    That holds only while both manifests read a file the same way. When
+    a column name maps to another physical column or type on the two
+    sides (a dropped and re-added or a swapped name, a widened type),
+    every entry is read, as :func:`read_table` would."""
+    ma, mb = _m_load(path, v_from), _m_load(path, v_to)
+    removed, added, affected = _m_step_files(
+        path,
+        _m_entries(path, ma),
+        _m_delete_recs(path, ma),
+        _m_entries(path, mb),
+        _m_delete_recs(path, mb),
+    )
+
+    def _read_shape(m: dict) -> dict:
+        return {
+            f["name"]: (_phys(f), f["type"]) for f in m["schema"]["fields"]
+        }
+
+    same_shape = _read_shape(ma) == _read_shape(mb)
+    sides = []
+    for m, own in ((ma, removed), (mb, added)):
+        entries = own + affected if same_shape else _m_entries(path, m)
+        df = _m_apply_deletes(spark, path, entries, m)
+        tf = m.get("transforms")
+        if tf:  # hidden partition columns never reach a reader
+            df = df.drop(*[t["name"] for t in tf])
+        sides.append(df)
+    return sides[0], sides[1]
+
+
 def table_diff(
     spark: SparkSession,
     path: str,
@@ -4580,11 +4647,20 @@ def table_diff(
     the keys and classify — key only in ``v_to`` → insert, only in
     ``v_from`` → delete, in both with any non-key column differing →
     update (unchanged rows emit nothing). Struct equality does the
-    whole-row compare in one codegen'd expression. At 100 TB the same
-    call runs over partition-filtered reads of the two snapshots.
+    whole-row compare in one codegen'd expression. ``keys`` must be
+    unique per row in each snapshot.
+
+    On a manifest table only the entries that differ are read: the
+    files one version lists and the other does not, and the files both
+    list whose applicable delete records changed (see
+    :func:`_m_diff_sides`). A one-file MERGE step thus reads the file
+    it removed and the files it added, not two whole snapshots.
     """
-    a = read_table(spark, path, version=v_from)
-    b = read_table(spark, path, version=v_to)
+    if _is_manifest_table(path):
+        a, b = _m_diff_sides(spark, path, v_from, v_to)
+    else:
+        a = read_table(spark, path, version=v_from)
+        b = read_table(spark, path, version=v_to)
     cols = a.columns
     if set(cols) != set(b.columns):
         raise ValueError(
@@ -4706,7 +4782,13 @@ def changes(
     by. Defaults: the full committed range. Steps whose schema changed
     are diffed on the common projection of ``keys`` plus shared
     columns only when schemas match; a schema-evolution step raises
-    (choose the projection explicitly via :func:`table_diff`)."""
+    (choose the projection explicitly via :func:`table_diff`).
+
+    ``keys`` must be unique per row. Each step reads only the entries
+    that differ (see :func:`table_diff`), and a manifest step stamped
+    ``dataChange: false`` (compact, z-order) is skipped without opening
+    a file, as the ``spype_lake`` change feed does. When every step is
+    skipped the result is an empty frame of the same schema."""
     vs = versions(path)
     if not vs:
         raise FileNotFoundError(f"no committed versions under {path}")
@@ -4715,12 +4797,36 @@ def changes(
     span = [v for v in vs if lo <= v <= hi]
     if len(span) < 2:
         raise ValueError(f"need at least two versions in [{lo}, {hi}]")
+    manifest = _is_manifest_table(path)
     out = None
     for a, b in zip(span, span[1:]):
+        if (
+            manifest
+            and b == a + 1
+            and (_m_load(path, b).get("op") or {}).get("dataChange", True)
+            is False
+        ):
+            continue
         step = table_diff(spark, path, a, b, keys).withColumn(
             "version", F.lit(b).cast("long")
         )
         out = step if out is None else out.unionByName(step)
+    if out is None:
+        from pyspark.sql.types import (
+            LongType, StringType, StructField, StructType,
+        )
+
+        schema = StructType.fromJson(_m_load(path, span[-1])["schema"])
+        out = spark.createDataFrame(
+            [],
+            StructType(
+                [StructField(k, schema[k].dataType) for k in keys]
+                + [
+                    StructField("op", StringType()),
+                    StructField("version", LongType(), False),
+                ]
+            ),
+        ).limit(0)  # collected without a job
     return out
 
 

@@ -195,6 +195,77 @@ def col_map(schema_json: dict) -> dict[str, str]:
     return {f["name"]: phys(f) for f in schema_json["fields"]}
 
 
+def m_delete_recs(path: str, m: dict) -> list[dict]:
+    """Delete-state records of one manifest: sidecar path under the
+    table root (absolute when the manifest lists it so), kind (``eq``
+    equality-delete keys / ``pos`` positional DV) and the commit seq
+    the sequence rule filters by."""
+    recs = [
+        {
+            "path": os.path.join(path, d["path"]),
+            "kind": "eq",
+            "keys": list(d["keys"]),
+            "seq": int(d["seq"]),
+        }
+        for d in m.get("deletes") or []
+    ]
+    recs += [
+        {
+            "path": os.path.join(path, d["path"]),
+            "kind": "pos",
+            "seq": int(d["seq"]),
+        }
+        for d in m.get("pos_deletes") or []
+    ]
+    return recs
+
+
+def m_applicable(recs: list[dict], entry: dict) -> list[dict]:
+    """The delete records that apply to ``entry`` by the sequence rule:
+    those recorded after the commit that wrote it."""
+    s = int(entry.get("seq", 0))
+    return [r for r in recs if r["seq"] > s]
+
+
+def m_step_files(
+    path: str,
+    old_entries: list[dict],
+    old_recs: list[dict],
+    new_entries: list[dict],
+    new_recs: list[dict],
+) -> tuple[list[dict], list[dict], list[dict]]:
+    """The files a step between two manifests of one table touched:
+    ``(removed, added, affected)``.
+
+    An entry listed by both manifests (same resolved path, same seq) is
+    KEPT. A kept entry whose applicable delete records are the same on
+    both sides holds the same live rows on both, so no change can come
+    from it. The rest are AFFECTED (returned as the new side's entry):
+    the step gave them a delete record, or took one away. ``removed``
+    and ``added`` are the entries only the old or only the new manifest
+    lists."""
+
+    def _by(entries):
+        # clone and branch entries are absolute, the rest table-relative
+        return {
+            (os.path.abspath(os.path.join(path, e["path"])), e.get("seq")): e
+            for e in entries
+        }
+
+    def _ids(recs, e):
+        return {r["path"] for r in m_applicable(recs, e)}
+
+    old_by, new_by = _by(old_entries), _by(new_entries)
+    removed = [e for k, e in old_by.items() if k not in new_by]
+    added = [e for k, e in new_by.items() if k not in old_by]
+    affected = [
+        e
+        for k, e in new_by.items()
+        if k in old_by and _ids(old_recs, e) != _ids(new_recs, e)
+    ]
+    return removed, added, affected
+
+
 def m_part_key(entry: dict) -> str:
     """Grouping key for manifest parts: the entry's data-commit uuid
     directory + its partition tuple. Both components are IMMUTABLE for

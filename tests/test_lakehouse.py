@@ -266,6 +266,8 @@ _op = st.one_of(
                         min_size=1, max_size=5),
     ),
     st.tuples(st.just("delete_mod"), st.tuples(st.integers(2, 4), st.integers(0, 3))),
+    # positional DV delete: every kept older file gains a DV record
+    st.tuples(st.just("delete_dv"), st.tuples(st.integers(2, 4), st.integers(0, 3))),
     st.tuples(
         st.just("delete_keys"),
         st.sets(_KEYS, min_size=1, max_size=4),
@@ -320,9 +322,10 @@ def test_lakehouse_random_op_sequences_match_model(
                 for k, (v, ts) in arg.items():
                     if k not in model or ts >= model[k][1]:
                         model[k] = (v, ts)
-            elif kind == "delete_mod":
+            elif kind in ("delete_mod", "delete_dv"):
                 m, r = arg
-                lake.delete_where(spark, path, F.col("v") % m == r)
+                delete = lake.delete_where if kind == "delete_mod" else lake.delete_where_dv
+                delete(spark, path, F.col("v") % m == r)
                 model = {k: vt for k, vt in model.items() if vt[0] % m != r}
             elif kind == "delete_keys":  # merge-on-read tombstones
                 kd = spark.createDataFrame(
@@ -357,6 +360,23 @@ def test_lakehouse_random_op_sequences_match_model(
                 for r in lake.read_table(spark, path, version=ver).collect()
             }
             assert got == snap, f"version {ver}: ops={ops}"
+        # the change feed of every step equals the diff of the
+        # consecutive model snapshots
+        want = set()
+        for ver in range(1, len(snapshots)):
+            before, after = snapshots[ver - 1], snapshots[ver]
+            for k in before.keys() | after.keys():
+                if k not in before:
+                    want.add((ver, k, "insert"))
+                elif k not in after:
+                    want.add((ver, k, "delete"))
+                elif before[k] != after[k]:
+                    want.add((ver, k, "update"))
+        feed = {
+            (r.version, r.k, r.op)
+            for r in lake.changes(spark, path, ["k"]).collect()
+        }
+        assert feed == want, f"ops={ops}"
     finally:
         _sh.rmtree(path, ignore_errors=True)
 
@@ -489,9 +509,10 @@ def test_partitioned_lakehouse_sequences_match_model(
                     for k, (v, ts) in arg.items():
                         if k not in model or ts >= model[k][1]:
                             model[k] = (v, ts)
-            elif kind == "delete_mod":
+            elif kind in ("delete_mod", "delete_dv"):
                 m, r = arg
-                lake.delete_where(spark, path, F.col("v") % m == r)
+                delete = lake.delete_where if kind == "delete_mod" else lake.delete_where_dv
+                delete(spark, path, F.col("v") % m == r)
                 model = {k: vt for k, vt in model.items() if vt[0] % m != r}
             elif kind == "delete_keys":  # MOR tombstones, partitioned
                 kd = spark.createDataFrame(

@@ -9,6 +9,7 @@ available predictor of passing the driver's CORRECTNESS check.
 Usage:
     python tools/check.py                 # all queries at sf0.01
     python tools/check.py q_join_3way ... # subset
+    python tools/check.py 'q_lake_*'      # subset by shell-style glob
     python tools/check.py --sf /root/testdata/sf0.001
 """
 
@@ -17,6 +18,7 @@ from __future__ import annotations
 import argparse
 import datetime as dt
 import decimal
+import fnmatch
 import hashlib
 import os
 import sys
@@ -230,7 +232,10 @@ def hash_tables_fast(tab_s, tab_d):
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("keys", nargs="*", help="query keys (default: all)")
+    ap.add_argument(
+        "keys", nargs="*",
+        help="query keys or shell-style globs, e.g. 'q_lake_*' (default: all)",
+    )
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument(
         "--shuffle-partitions",
@@ -249,8 +254,12 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    keys = args.keys or sorted(REGISTRY)
-    unknown = [k for k in keys if k not in REGISTRY]
+    keys, unknown = [], []
+    for pat in args.keys or ["*"]:
+        hits = fnmatch.filter(sorted(REGISTRY), pat)
+        if not hits:
+            unknown.append(pat)
+        keys += [k for k in hits if k not in keys]
     if unknown:
         print(f"unknown keys: {unknown}")
         return 2
