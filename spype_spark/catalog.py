@@ -1136,13 +1136,7 @@ class Transaction:
         path = self.cat.table_path(name)
         pcols, tfs = lake._norm_partition_spec(partition_by)
         lake._stamp_transforms(df, tfs)
-        if not os.path.isdir(path):
-            os.makedirs(path, exist_ok=True)
-            meta = {"partition_by": pcols, "protocol": "manifest"}
-            if tfs:
-                meta["transforms"] = tfs
-            with open(lake._meta_path(path), "w") as f:
-                json.dump(meta, f)
+        os.makedirs(path, exist_ok=True)
         base = self._staged.get(name, self._base_state.get(name))
         v = self._stage(
             df, path, pcols, [], base,

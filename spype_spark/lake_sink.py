@@ -1662,13 +1662,8 @@ class LakeSinkDataSource(DataSource):
         for f in schema_json["fields"]:
             f["metadata"] = {}
         os.makedirs(path, exist_ok=True)
-        # _table.json FIRST (what every engine verb reads partition_by
-        # and protocol from — write_table's own create order); then
-        # the empty v0 manifest, put-if-absent so racing creators fail
-        with open(os.path.join(path, "_table.json"), "w") as f:
-            _json.dump(
-                {"partition_by": pcols or None, "protocol": "manifest"}, f
-            )
+        # publish the empty v0 manifest put-if-absent, so racing
+        # creators fail
         v0 = {
             "version": 0,
             "base": None,

@@ -3,10 +3,7 @@
 Delta/Iceberg jars (absent from this container; ROADMAP "No lakehouse
 table format").
 
-Two commit protocols share one public API; a table's protocol is chosen
-at :func:`write_table` and detected from the layout afterwards:
-
-**manifest (default — object-store-portable).** Every version is a
+One commit protocol, built for object storage. Every version is a
 single JSON manifest listing its data files BY REFERENCE::
 
     <table>/_manifests/v=N.json        the commit point (put-if-absent)
@@ -19,59 +16,29 @@ primitive. Locally that primitive is ``os.link(tmp, final)`` of a fully
 fsync'd temp file (atomic, fails on EEXIST); on S3/GCS it is the same
 single-object conditional PUT (``If-None-Match: *`` /
 ``x-goog-if-generation-match: 0``) — no directory rename, no hardlink
-of data files, nothing POSIX-only on the data path. Copy-on-write
-carry-over is a manifest ENTRY copy: untouched files appear in the new
-manifest under their existing paths, byte-for-byte shared by reference
-exactly as Delta's log and Iceberg's manifests share unchanged files.
-Each entry carries its partition tuple and per-column min/max footer
-stats, so mutation planning (partition-level AND file-level pruning) is
-pure manifest metadata — zero object reads at plan time, the property
-that makes a 100 TB MERGE plan in milliseconds. Partition columns stay
-IN the data files (Iceberg's model: identity-partition columns are
-ordinary columns; the Hive-style dirs under each commit uuid are write
-plumbing only), so a snapshot read is ``spark.read.schema(s).parquet(
-*files)`` with no partition-discovery dependence. The per-version
-schema rides in the manifest.
+of data files, nothing POSIX-only on the data path. Concurrency is
+optimistic, like Delta's log-append / Iceberg's catalog swap: each
+mutation captures the table's latest version as its base and commits
+only to ``base+1``; if a concurrent writer got there first the publish
+raises :class:`ConcurrentWriteError` and the caller re-reads and
+retries the whole mutation.
 
-**posix (opt-in fast path: ``protocol="posix"``).** Every version is a
-complete immutable snapshot directory::
-
-    <table>/v=0/part-*.parquet   (+ _SUCCESS)
-    <table>/v=1/part-*.parquet   (+ _SUCCESS)
-
-Posix commit protocol (round 3): a writer never writes into ``v=N``
-directly. It writes the full snapshot to a hidden ``.tmp-<uuid>``
-directory (Spark's ``_SUCCESS`` lands there), then publishes with ONE
-``os.rename(tmp, v=N)`` — atomic on POSIX, and it FAILS if ``v=N``
-already exists, so two racing writers can never interleave files in
-one snapshot directory. Concurrency is optimistic, like Delta's
-log-append / Iceberg's catalog swap: each mutation captures the
-table's latest version as its base and commits only to ``base+1``; if
-a concurrent writer got there first the rename raises
-:class:`ConcurrentWriteError` and the LOSER's temp dir is removed —
-the caller re-reads and retries the whole mutation. Readers still
-require the ``_SUCCESS`` marker (belt on top of the atomic-rename
-suspenders), so a half-written snapshot is unobservable twice over.
-
-Copy-on-write granularity (round 7): an unpartitioned table rewrites
-the full snapshot per mutation; a table created with
-``write_table(..., partition_by=col_or_list)`` gets PARTITION-LEVEL
-copy-on-write — MERGE/DELETE rewrite only the ``col=value`` leaf
-partitions their keys/predicate touch and hardlink every untouched
-partition directory into the new snapshot (zero data copied; both
-snapshots share the same immutable files, exactly how real formats
-share unchanged data files through manifests). Inside the touched
-partitions, single-key MERGE goes one level finer — FILE-level
-manifest pruning: parquet FOOTER min/max statistics on the merge key
-(the same stats a manifest would carry) prove which data files cannot
-contain a matched row; those hardlink over individually and only the
-possibly-matching files are read back as the rewrite input, so an
-insert-heavy CDC merge writes the new rows and links nearly everything
-else. Every pruning layer falls back to the next-coarser rewrite
-whenever it can't prove safety (null/path-special partition values,
-missing or non-numeric footer stats) — correctness over cleverness.
-At 100 TB this is the difference between a mutation costing O(table)
-and O(touched files).
+Copy-on-write carry-over is a manifest ENTRY copy: untouched files
+appear in the new manifest under their existing paths, byte-for-byte
+shared by reference exactly as Delta's log and Iceberg's manifests
+share unchanged files. Each entry carries its partition tuple and
+per-column min/max footer stats, so mutation planning (partition-level
+AND file-level pruning) is pure manifest metadata — zero object reads
+at plan time, the property that makes a 100 TB MERGE plan in
+milliseconds. Every pruning layer falls back to the next-coarser
+rewrite whenever it can't prove safety (null/path-special partition
+values, missing or unusable stats) — correctness over cleverness.
+Partition columns stay IN the data files (Iceberg's model:
+identity-partition columns are ordinary columns; the Hive-style dirs
+under each commit uuid are write plumbing only), so a snapshot read is
+``spark.read.schema(s).parquet(*files)`` with no partition-discovery
+dependence. The per-version schema, partition spec and transforms ride
+in the manifest.
 """
 
 from __future__ import annotations
@@ -108,7 +75,6 @@ from spype_spark.manifest_log import (  # noqa: F401  (historical aliases)
     m_step_files as _m_step_files,
     m_versions as _m_versions,
     phys as _phys,
-    usable_stat_pair as _usable_stat_pair,
 )
 from spype_spark.bloom import (
     bloom_all_miss as _bloom_all_miss,
@@ -116,8 +82,6 @@ from spype_spark.bloom import (
     bloom_might_contain as _bloom_might_contain,
 )
 from spype_spark.planning import lazy_checkpoint
-
-_VERSION_RE = re.compile(r"^v=(\d+)$")
 
 # Retention grace window for the path-refcount GC (see _m_gc_files):
 # an unreferenced file younger than this many seconds is presumed to
@@ -141,20 +105,10 @@ class ConstraintViolation(ValueError):
 
 
 def versions(path: str) -> list[int]:
-    """All committed versions, ascending. Manifest tables: one per
-    published ``_manifests/v=N.json`` (complete by construction —
-    put-if-absent of a fully written file). Posix tables: one per
-    SUCCESS-marked snapshot directory."""
-    if not os.path.isdir(path):
-        return []
-    if _is_manifest_table(path):
-        return _m_versions(path)
-    out = []
-    for d in os.listdir(path):
-        m = _VERSION_RE.match(d)
-        if m and os.path.exists(os.path.join(path, d, "_SUCCESS")):
-            out.append(int(m.group(1)))
-    return sorted(out)
+    """All committed versions, ascending: one per published
+    ``_manifests/v=N.json`` (complete by construction — put-if-absent
+    of a fully written file)."""
+    return _m_versions(path)
 
 
 def latest_version(path: str) -> int:
@@ -167,8 +121,7 @@ def latest_version(path: str) -> int:
 def commit_timestamps(path: str) -> list[tuple[int, float]]:
     """``(version, commit_ts)`` pairs, ascending, for every committed
     version. The timestamp is the commit OBJECT's modification time —
-    the manifest json for manifest tables, the snapshot directory's
-    ``_SUCCESS`` marker for posix tables — which is exactly the public
+    the version's manifest json — which is exactly the public
     design Delta documents for ``TIMESTAMP AS OF`` (log-file
     modification times): the commit object is written once and never
     rewritten, so its mtime IS the commit instant, with no extra field
@@ -179,13 +132,8 @@ def commit_timestamps(path: str) -> list[tuple[int, float]]:
     out: list[tuple[int, float]] = []
     hi = float("-inf")
     for v in versions(path):
-        obj = (
-            _m_path(path, v)
-            if _is_manifest_table(path)
-            else os.path.join(_snapshot_dir(path, v), "_SUCCESS")
-        )
         try:
-            ts = os.path.getmtime(obj)
+            ts = os.path.getmtime(_m_path(path, v))
         except OSError:
             continue  # vacuumed between the listing and the stat
         hi = max(hi, ts)
@@ -210,46 +158,20 @@ def version_at(path: str, timestamp: float) -> int:
     return best
 
 
-def _snapshot_dir(path: str, version: int) -> str:
-    return f"{path}/v={version}"
-
-
-def _meta_path(path: str) -> str:
-    return os.path.join(path, "_table.json")
-
-
 def table_meta(path: str) -> dict:
-    """Table-level metadata (currently: ``partition_by``, normalized to
-    a list of column names). Written once at :func:`write_table`;
-    static for the table's lifetime."""
-    p = _meta_path(path)
-    if not os.path.exists(p):
+    """Table-level metadata of the HEAD version: ``partition_by`` (a
+    list of column names, or None) and, when the table has hidden
+    partitioning, ``transforms``. Read from the head manifest, so it
+    follows :func:`set_partition_spec` and :func:`restore_table`.
+    Empty for a path that holds no committed version."""
+    vs = versions(path)
+    if not vs:
         return {}
-    with open(p) as f:
-        meta = json.load(f)
-    pb = meta.get("partition_by")
-    if isinstance(pb, str):
-        meta["partition_by"] = [pb]
+    m = _m_load(path, vs[-1])
+    meta = {"partition_by": m.get("partition_by")}
+    if m.get("transforms"):
+        meta["transforms"] = m["transforms"]
     return meta
-
-
-def _link_tree(src: str, dst: str) -> None:
-    """Recursively hardlink ``src`` into ``dst`` — the copy-on-write
-    carry-over for untouched partition directories (or, at file
-    granularity, a single untouched data file): zero data copied, both
-    snapshots share the same immutable parquet files (same filesystem
-    by construction — both live under the table root)."""
-    if os.path.isfile(src):
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.link(src, dst)
-        return
-    os.makedirs(dst, exist_ok=True)
-    for name in os.listdir(src):
-        s, d = os.path.join(src, name), os.path.join(dst, name)
-        if os.path.isdir(s):
-            _link_tree(s, d)
-        else:
-            os.link(s, d)
 
 
 _EPOCH = "1970-01-01"
@@ -514,92 +436,6 @@ def _transform_prune_entries(
     return entries
 
 
-def _norm_pcols(partition_by) -> list[str] | None:
-    """Accept a column name or a list of names; None stays None."""
-    if partition_by is None:
-        return None
-    if isinstance(partition_by, str):
-        return [partition_by]
-    return list(partition_by)
-
-
-def _commit_snapshot(
-    df: DataFrame,
-    path: str,
-    version: int,
-    partition_by=None,
-    carry_from: str | None = None,
-    carry_rels: list[str] | None = None,
-) -> int:
-    """Write ``df`` as snapshot ``version`` via temp-dir + atomic rename.
-
-    The Spark job writes to ``.tmp-<uuid>`` (invisible to
-    :func:`versions`); the single ``os.rename`` publishes it. Rename to
-    an existing ``v=N`` fails at the filesystem level, so exactly one
-    of any number of racing writers wins version N — the losers' temp
-    dirs are cleaned up and they get :class:`ConcurrentWriteError`
-    without having touched the table.
-
-    ``carry_rels`` (snapshot-relative partition-directory paths, e.g.
-    ``["p=1", "d=2024/h=03"]``) are hardlinked from ``carry_from`` (the
-    BASE snapshot dir) into the new snapshot after the write —
-    partition-level copy-on-write: only touched partitions pay a
-    rewrite, untouched ones are shared by reference, and the
-    atomic-rename publish still covers the whole snapshot.
-    """
-    pcols = _norm_pcols(partition_by)
-    tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}")
-    # An EMPTY partitioned write produces no partition dirs and no
-    # parquet footers — an unreadable snapshot. Two empty-rewrite cases:
-    # with carried partitions, the carries ARE the snapshot (write only
-    # the _SUCCESS marker — a flat 0-row file would collide with
-    # partition discovery); with none, write the empty frame FLAT so
-    # the single 0-row footer preserves the schema.
-    empty = pcols is not None and df.isEmpty()
-    if empty and carry_rels:
-        os.makedirs(tmp)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    else:
-        writer = df.write.mode("errorifexists")
-        if pcols and not empty:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(tmp)
-    # Per-snapshot schema (Delta keeps it in the commit log): readers
-    # pass it to spark.read.schema(...) so partition values round-trip
-    # with their DECLARED types — without it, partition-discovery type
-    # inference retypes a string partition value '001' to int 1, which
-    # breaks the copy-on-write touched-partition matcher (stale
-    # partitions get carried AND rewritten under a new dir name) and
-    # silently retypes columns for every reader. Written into the temp
-    # dir, so the atomic rename publishes data + schema together.
-    with open(os.path.join(tmp, "_schema.json"), "w") as f:
-        f.write(df.schema.json())
-    try:
-        for rel in carry_rels or []:
-            _link_tree(os.path.join(carry_from, rel), os.path.join(tmp, rel))
-    except FileNotFoundError as exc:
-        # The base snapshot vanished mid-carry: a vacuum dropped it
-        # after this mutation captured it as its base (the writer lost
-        # the optimistic race AND its base got retention-collected).
-        # The table is uncorrupted — clean up and surface it as the
-        # same stale-base signal a lost rename produces.
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise ConcurrentWriteError(
-            f"base snapshot of {path} was vacuumed while this mutation "
-            f"was committing (stale base); re-read and retry"
-        ) from exc
-    final = _snapshot_dir(path, version)
-    try:
-        os.rename(tmp, final)
-    except OSError as exc:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise ConcurrentWriteError(
-            f"version {version} of {path} was committed concurrently "
-            f"(base version is stale); re-read and retry"
-        ) from exc
-    return version
-
-
 def _stamp_transforms(df: DataFrame, transforms: list[dict]) -> None:
     """Validate transform sources against ``df`` and stamp the recorded
     source type in place — shared by :func:`write_table` and the
@@ -628,49 +464,35 @@ def write_table(
     df: DataFrame,
     path: str,
     partition_by=None,
-    protocol: str = "manifest",
     bloom_keys=None,
 ) -> int:
     """Create a table at ``path`` as version 0 (errors if it exists).
 
-    ``protocol`` picks the commit protocol for the table's lifetime:
-    ``"manifest"`` (default — object-store-portable: put-if-absent
-    manifest commits, carry-over by file reference) or ``"posix"``
-    (atomic-directory-rename snapshots with hardlink carry-over — the
-    single-filesystem fast path). Detection afterwards is by layout.
-
-    ``partition_by`` (a column name or a LIST of names — e.g.
+    ``partition_by`` (a column name, a transform tuple — see
+    :func:`_norm_partition_spec` — or a LIST of them, e.g.
     ``["ship_date", "shard"]``, the date+shard layout SCALE.md assumes
     at 100 TB) enables PARTITION-LEVEL copy-on-write for all subsequent
-    mutations: MERGE/DELETE rewrite only the leaf partitions their
-    keys/predicate touch and carry the rest (manifest: by entry
-    reference; posix: by hardlink — see :func:`merge_upsert`).
-    Partition values should be simple scalars (string without
-    path-special characters, int) — the touched-partition matcher
-    compares their canonical string forms against the recorded
-    partition tuples; a null partition value falls back to a
-    full-snapshot rewrite rather than guessing Hive's default-partition
-    encoding.
+    mutations: MERGE/DELETE rewrite only the files of the leaf
+    partitions their keys/predicate touch and carry the rest by
+    manifest entry reference (see :func:`merge_upsert`). Partition
+    values should be simple scalars (string without path-special
+    characters, int) — the touched-partition matcher compares their
+    canonical string forms against the recorded partition tuples; a
+    null partition value falls back to a full rewrite rather than
+    guessing Hive's default-partition encoding.
 
-    ``bloom_keys`` (manifest protocol only; a column name or list)
-    opts the table into per-file BLOOM FILTERS on those columns — the
-    prune material for hash-shaped keys whose [min, max] never
-    refutes anything (see :mod:`spype_spark.bloom`). Every commit
-    that writes data files stamps each new entry's filter; MERGE and
-    the predicate planners consult them the same three-valued way as
-    min/max stats (miss = proof of absence). String and integral
-    columns only — float equality is not a join discipline.
+    ``bloom_keys`` (a column name or list) opts the table into
+    per-file BLOOM FILTERS on those columns — the prune material for
+    hash-shaped keys whose [min, max] never refutes anything (see
+    :mod:`spype_spark.bloom`). Every commit that writes data files
+    stamps each new entry's filter; MERGE and the predicate planners
+    consult them the same three-valued way as min/max stats (miss =
+    proof of absence). String and integral columns only — float
+    equality is not a join discipline.
     """
-    if protocol not in ("manifest", "posix"):
-        raise ValueError(f"unknown protocol {protocol!r}")
     if isinstance(bloom_keys, str):
         bloom_keys = [bloom_keys]
     if bloom_keys:
-        if protocol != "manifest":
-            raise ValueError(
-                "bloom_keys need manifest metadata; posix tables "
-                "carry no per-file entries"
-            )
         by_name = {f.name: f.dataType.typeName() for f in df.schema.fields}
         bad = [
             c
@@ -684,48 +506,14 @@ def write_table(
                 f"string/integral columns (Bloom key material)"
             )
     pcols, transforms = _norm_partition_spec(partition_by)
-    if transforms and protocol != "manifest":
-        raise ValueError(
-            "partition transforms (hidden partitioning) need manifest "
-            "metadata; posix tables take identity columns only"
-        )
     _stamp_transforms(df, transforms)
     if versions(path):
         raise FileExistsError(f"table already exists at {path}")
     os.makedirs(path, exist_ok=True)
-    meta = {"partition_by": pcols, "protocol": protocol}
-    if transforms:
-        meta["transforms"] = transforms
-    if pcols or protocol == "manifest":
-        with open(_meta_path(path), "w") as f:
-            json.dump(meta, f)
-    if protocol == "manifest":
-        return _m_commit(
-            df, path, 0, pcols, [], base=None, transforms=transforms or None,
-            op={"name": "WRITE", "dataChange": True},
-            bloom_keys=list(bloom_keys) if bloom_keys else None,
-        )
-    return _commit_snapshot(df, path, 0, partition_by=pcols)
-
-
-def _write_next(
-    df: DataFrame,
-    path: str,
-    base: int | None = None,
-    partition_by=None,
-    carry_from: str | None = None,
-    carry_rels: list[str] | None = None,
-) -> int:
-    """Commit ``df`` as ``base+1`` (optimistic: raises
-    :class:`ConcurrentWriteError` if someone else already did)."""
-    v = (latest_version(path) if base is None else base) + 1
-    return _commit_snapshot(
-        df,
-        path,
-        v,
-        partition_by=partition_by,
-        carry_from=carry_from,
-        carry_rels=carry_rels,
+    return _m_commit(
+        df, path, 0, pcols, [], base=None, transforms=transforms or None,
+        op={"name": "WRITE", "dataChange": True},
+        bloom_keys=list(bloom_keys) if bloom_keys else None,
     )
 
 
@@ -756,160 +544,8 @@ def _norm_part_val(s: str):
         return ("s", s)
 
 
-def _leaf_partition_rels(snap: str, pcols: list[str]) -> set[str]:
-    """Relative paths of the LEAF partition directories of a snapshot
-    (depth = len(pcols), each level a ``col=value`` dir)."""
-    rels = {""}
-    for c in pcols:
-        nxt = set()
-        for r in rels:
-            d = os.path.join(snap, r) if r else snap
-            for n in os.listdir(d):
-                if n.startswith(f"{c}=") and os.path.isdir(
-                    os.path.join(d, n)
-                ):
-                    nxt.add(os.path.join(r, n) if r else n)
-        rels = nxt
-    return rels
-
-
-def _file_key_interval(fpath: str, key: str):
-    """(min, max) of ``key`` across a parquet file's row groups, read
-    from the FOOTER statistics only (a metadata-sized driver read, the
-    same stats a manifest would carry) — or None when any row group
-    lacks min/max, in which case the caller must treat the file as
-    possibly-matching and rewrite it."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(fpath).metadata
-    idx = None
-    for i in range(md.num_columns):
-        if md.schema.column(i).name == key:
-            idx = i
-            break
-    if idx is None:
-        return None
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return None if lo is None else (lo, hi)
-
-
-def _file_cow_split(
-    snap: str, touched_rels: list[str], key: str, umin, umax
-) -> tuple[list[str], list[str]] | None:
-    """FILE-level manifest pruning inside the touched partitions:
-    split their data files into (linkable_rels, rewrite_paths) using
-    footer min/max stats on the merge key — a file whose key interval
-    cannot intersect [umin, umax] provably contains no matched row and
-    is carried by hardlink; everything else is read back as the
-    rewrite input. Returns None when stats are unusable (caller falls
-    back to rewriting the whole touched partitions). Interval pruning
-    is conservative by construction: it only ever EXCLUDES files whose
-    ranges cannot match."""
-    if umin is None or umax is None:
-        return None
-    link_rels: list[str] = []
-    rewrite: list[str] = []
-    for rel in touched_rels:
-        d = os.path.join(snap, rel) if rel else snap
-        if not os.path.isdir(d):
-            continue  # insert-only partition: nothing to carry/rewrite
-        for name in os.listdir(d):
-            if not name.endswith(".parquet"):
-                continue
-            fpath = os.path.join(d, name)
-            try:
-                iv = _file_key_interval(fpath, key)
-            except Exception:
-                return None
-            frel = os.path.join(rel, name) if rel else name
-            usable = iv is not None and _usable_stat_pair(*iv)
-            try:
-                disjoint = usable and (iv[1] < umin or iv[0] > umax)
-            except TypeError:
-                # umin/umax not comparable to the footer stats (e.g.
-                # string bounds on an int column — between() would
-                # cast, the footer compare can't): stats unusable, the
-                # caller falls back to the coarser rewrite.
-                return None
-            if disjoint:
-                link_rels.append(frel)
-            else:
-                rewrite.append(fpath)
-    return link_rels, rewrite
-
-
-def _cow_plan(
-    path: str, base: int, pcols: list[str], touched_vals: set
-) -> tuple[list[str], object] | None:
-    """Partition-level copy-on-write plan:
-    (carry_rels, touched_filter) for a mutation that touches only the
-    ``touched_vals`` leaf partitions (each a TUPLE of values, one per
-    partition column) — or None when the plan can't be built safely (a
-    value whose canonical string form wouldn't round-trip through its
-    Hive ``col=value`` directory name, e.g. null or path-special
-    characters), in which case the caller falls back to the
-    full-snapshot rewrite. Correctness over cleverness: a mismatched
-    name would silently CARRY a partition that should have been
-    rewritten."""
-    tuples = []
-    for vt in touched_vals:
-        parts = []
-        for v in vt:
-            sv = str(v)
-            if v is None or not _SAFE_PART_VAL.match(sv):
-                return None
-            parts.append(sv)
-        tuples.append(parts)
-    snap = _snapshot_dir(path, base)
-    existing = _leaf_partition_rels(snap, pcols)
-    touched_rels = {
-        os.path.join(*[f"{c}={sv}" for c, sv in zip(pcols, parts)])
-        for parts in tuples
-    }
-    # Defense-in-depth against value/directory-name ambiguity: a
-    # touched tuple whose rel is NOT an existing leaf is normally a
-    # fresh-partition insert (fine), but if it compares EQUAL to an
-    # existing leaf after value normalization ('1' vs '001', '1' vs
-    # '1.0', 'True' vs 'true') while spelling differently, the string
-    # match can no longer prove which directory holds the rows — carry
-    # nothing, rewrite the full snapshot. With per-snapshot schemas the
-    # table's own values round-trip exactly; this catches differently
-    # typed values arriving in a caller's updates frame.
-    existing_norm = {
-        tuple(
-            _norm_part_val(seg.split("=", 1)[1]) for seg in r.split(os.sep)
-        ): r
-        for r in existing
-    }
-    for parts in tuples:
-        rel = os.path.join(*[f"{c}={sv}" for c, sv in zip(pcols, parts)])
-        if rel in existing:
-            continue
-        clash = existing_norm.get(tuple(_norm_part_val(sv) for sv in parts))
-        if clash is not None:
-            return None
-    carry = sorted(existing - touched_rels)
-    # touched filter compares on canonical strings — the same form the
-    # directory names carry, so typed partition columns (int) match.
-    # NUL-joined so multi-column tuples can't alias each other.
-    if tuples:
-        key = F.concat_ws(
-            "\x00", *[F.col(c).cast("string") for c in pcols]
-        )
-        touched_filter = key.isin(["\x00".join(p) for p in tuples])
-    else:
-        touched_filter = F.lit(False)
-    return carry, touched_filter
-
-
 # ---------------------------------------------------------------------------
-# Manifest protocol (default): object-store-portable commits.
+# Manifest commits: object-store-portable.
 # ---------------------------------------------------------------------------
 
 #: Shadow-column prefix for the partitioned write: partition columns
@@ -1597,8 +1233,9 @@ def _m_entry_key(entry: dict, pcols: list[str]) -> tuple:
 def _m_touched_strs(touched_vals: set) -> set[tuple] | None:
     """Canonical string tuples for the touched partition values — or
     None when any value can't round-trip through a ``col=value``
-    directory segment (null / path-special), forcing the full rewrite.
-    Same discipline as the posix :func:`_cow_plan`."""
+    directory segment (null / path-special), forcing the full rewrite:
+    a mismatched spelling would silently CARRY a file that should have
+    been rewritten."""
     out = set()
     for vt in touched_vals:
         parts = []
@@ -2125,8 +1762,8 @@ def _m_cow_entries(
     """Partition-level COW plan from the manifest: split the base
     entries into (carry, touched) by partition tuple — or None when a
     touched value can't round-trip / normalizes ambiguously against a
-    differently spelled recorded tuple (full rewrite; same discipline
-    as the posix :func:`_cow_plan`)."""
+    differently spelled recorded tuple (full rewrite — see
+    :func:`_m_touched_strs`)."""
     tstrs = _m_touched_strs(touched_vals)
     if tstrs is None:
         return None
@@ -2465,7 +2102,7 @@ def _clone_roots(path: str) -> list[str]:
                 dst = json.load(f)["path"]
         except (OSError, ValueError, KeyError):
             continue
-        if _is_manifest_table(dst):
+        if versions(dst):
             out.append(os.path.abspath(dst))
         else:
             try:
@@ -2601,35 +2238,20 @@ def read_table(
     via :func:`version_at` from commit-object modification times;
     mutually exclusive with ``version``.
 
-    When the snapshot carries a ``_schema.json`` (every snapshot
-    committed since the schema-persistence fix does), the read uses it
-    as the explicit source schema: partition-discovery type inference
-    is bypassed, so partition values keep their declared types (string
-    '001' stays '001' instead of becoming int 1, booleans stay
-    boolean). Pre-fix snapshots without the file fall back to the old
-    inferring read."""
+    The read uses the version's manifest schema as the explicit source
+    schema: partition-discovery type inference never runs, so partition
+    values keep their declared types (string '001' stays '001' instead
+    of becoming int 1, booleans stay boolean)."""
     if timestamp is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp, not both")
         version = version_at(path, timestamp)
     v = latest_version(path) if version is None else version
-    if _is_manifest_table(path):
-        df = _m_read(spark, path, v)
-        tf = _m_load(path, v).get("transforms")
-        if tf:  # hidden partition columns never reach a reader
-            df = df.drop(*[t["name"] for t in tf])
-        return df
-    if v not in versions(path):
-        raise FileNotFoundError(f"version {v} not committed under {path}")
-    snap = _snapshot_dir(path, v)
-    sp = os.path.join(snap, "_schema.json")
-    if os.path.exists(sp):
-        from pyspark.sql.types import StructType
-
-        with open(sp) as f:
-            schema = StructType.fromJson(json.load(f))
-        return spark.read.schema(schema).parquet(snap)
-    return spark.read.parquet(snap)
+    df = _m_read(spark, path, v)
+    tf = _m_load(path, v).get("transforms")
+    if tf:  # hidden partition columns never reach a reader
+        df = df.drop(*[t["name"] for t in tf])
+    return df
 
 
 def scan_table(
@@ -2679,15 +2301,8 @@ def scan_table(
     all carry the rewriting commit's seq, so a consumer of a table
     that also merges/deletes should use :func:`changes` instead —
     ``since`` is the appends fast path. All knobs compose as a
-    conjunction. Posix-protocol tables fall back to a plain filtered
-    read (Catalyst still partition-prunes Hive dirs there; ``since``
-    requires manifest seq metadata and raises there)."""
+    conjunction."""
     v = latest_version(path) if version is None else version
-    if since is not None and not _is_manifest_table(path):
-        raise ValueError(
-            "since= needs manifest commit-sequence metadata; posix "
-            "tables don't record it (use changes() instead)"
-        )
     if where is not None:
         where = _pred_resolve(where)  # runtime (subquery) leaves → IN
 
@@ -2705,8 +2320,6 @@ def scan_table(
             df = df.filter(_pred_column(where))
         return df
 
-    if not _is_manifest_table(path):
-        return _residual(read_table(spark, path, version=v))
     m = _m_load(path, v)
     maybe = (
         _pred_compile(where, m.get("partition_by"), root=path)
@@ -2822,12 +2435,7 @@ def widen_types(spark: SparkSession, path: str, types: dict) -> int:
     schema. Only the exact transitions in :data:`_WIDEN_OK` are legal
     (``{"col": "bigint", ...}``; aliases ``long``/``short`` accepted);
     anything else — unknown column, narrowing, lossy — raises
-    ``ValueError``. Manifest protocol only. Returns the new version."""
-    if not _is_manifest_table(path):
-        raise ValueError(
-            f"{path} is not a manifest-protocol table (type widening "
-            "needs schema-carrying manifests)"
-        )
+    ``ValueError``. Returns the new version."""
     # StructType JSON names vs DDL/simpleString names for the atomic
     # types widening can involve
     json_to_simple = {
@@ -2913,11 +2521,6 @@ def set_partition_spec(spark: SparkSession, path: str, partition_by) -> int:
     columns must exist in the schema; ``truncate`` sources must be
     integer/string (checked against the RECORDED schema type). Returns
     the new version."""
-    if not _is_manifest_table(path):
-        raise ValueError(
-            f"{path} is not a manifest-protocol table (partition-spec "
-            "evolution needs manifest metadata)"
-        )
     base = latest_version(path)
     m = _m_load(path, base)
     pcols, new_tf, schema_json = _spec_plan(m, partition_by)
@@ -3038,13 +2641,7 @@ def rename_columns(spark: SparkSession, path: str, renames: dict) -> int:
     SIMULTANEOUSLY (``{"a": "b", "b": "a"}`` swaps). Time travel to
     pre-rename versions serves their own recorded names. Rejected:
     unknown columns, a post-rename name collision, pending
-    equality-delete files (compact first), posix tables. Returns the
-    new version."""
-    if not _is_manifest_table(path):
-        raise ValueError(
-            f"{path} is not a manifest-protocol table (rename needs "
-            "schema-carrying manifests)"
-        )
+    equality-delete files (compact first). Returns the new version."""
     base = latest_version(path)
     m = _m_load(path, base)
     tf = m.get("transforms") or []
@@ -3149,13 +2746,7 @@ def drop_columns(spark: SparkSession, path: str, cols) -> int:
     the dropped columns are stripped in the same commit so a future
     re-added namesake can never be pruned against stale bounds.
     Rejected: unknown columns, partition columns, dropping every
-    column, pending equality-delete files, posix tables. Returns the
-    new version."""
-    if not _is_manifest_table(path):
-        raise ValueError(
-            f"{path} is not a manifest-protocol table (drop needs "
-            "schema-carrying manifests)"
-        )
+    column, pending equality-delete files. Returns the new version."""
     base = latest_version(path)
     m = _m_load(path, base)
     tf = m.get("transforms") or []
@@ -3264,13 +2855,8 @@ def add_constraint(
     mutation with :class:`ConstraintViolation` and touching nothing.
     Per-commit cost is one extra job over the WRITTEN rows only (zero
     when a table has no constraints) — the same trade Delta documents
-    for CHECK constraints. Metadata-only commit; manifest protocol
-    only. Returns the new version."""
-    if not _is_manifest_table(path):
-        raise ValueError(
-            f"{path} is not a manifest-protocol table (constraints "
-            "need schema-carrying manifests)"
-        )
+    for CHECK constraints. Metadata-only commit. Returns the new
+    version."""
     def _no_subquery(p):
         if p[0] in ("and", "or"):
             for q in p[1:]:
@@ -3367,11 +2953,6 @@ def set_bloom_keys(spark: SparkSession, path: str, keys) -> int:
     if isinstance(keys, str):
         keys = [keys]
     keys = list(keys)
-    if not _is_manifest_table(path):
-        raise ValueError(
-            f"{path} is not a manifest-protocol table (Bloom filters "
-            "live in manifest entries)"
-        )
     base = latest_version(path)
     m = _m_load(path, base)
     fields = {f["name"]: f for f in m["schema"]["fields"]}
@@ -3447,9 +3028,9 @@ def _merged_frame(
     evolve_schema: bool,
     match_condition,
 ) -> DataFrame:
-    """The protocol-independent relational core of MERGE: given the
-    (possibly COW-pruned) target rows and the update set, produce the
-    merged rows. See :func:`merge_upsert` for the semantics."""
+    """The relational core of MERGE: given the (possibly COW-pruned)
+    target rows and the update set, produce the merged rows. See
+    :func:`merge_upsert` for the semantics."""
     if evolve_schema:
         out = updates.unionByName(
             tgt.join(updates.select(*keys), keys, "left_anti"),
@@ -3715,9 +3296,9 @@ def merge(
     (filter into a staging table, or run per-partition merges) when
     that matters at 100 TB.
 
-    On a manifest table the source is evaluated once per MERGE, as
-    Delta's ``merge.materializeSource`` does: pruning and the write
-    read one materialized copy (see :func:`_m_merge_plan`)."""
+    The source is evaluated once per MERGE, as Delta's
+    ``merge.materializeSource`` does: pruning and the write read one
+    materialized copy (see :func:`_m_merge_plan`)."""
     _validate_merge_clauses(
         when_matched,
         matched_condition,
@@ -3744,21 +3325,12 @@ def merge(
         "not_matched_condition": not_matched_condition,
     }
     base = latest_version(path)
-    if _is_manifest_table(path):
-        merged, carry, pcols, dels = _m_merge_plan(
-            spark, path, base, source, keys, clauses=clauses
-        )
-        return _m_commit(
-            merged, path, base + 1, pcols, carry, base=base, deletes=dels,
-            op={"name": "MERGE", "dataChange": True},
-        )
-    tgt = read_table(spark, path, version=base)
-    merged = _merged_frame_full(tgt, source, keys, **clauses)
-    return _write_next(
-        merged,
-        path,
-        base=base,
-        partition_by=table_meta(path).get("partition_by"),
+    merged, carry, pcols, dels = _m_merge_plan(
+        spark, path, base, source, keys, clauses=clauses
+    )
+    return _m_commit(
+        merged, path, base + 1, pcols, carry, base=base, deletes=dels,
+        op={"name": "MERGE", "dataChange": True},
     )
 
 
@@ -3797,95 +3369,16 @@ def merge_upsert(
     Off by default: silent widening is how typo'd column names corrupt
     a table. (Mutually exclusive with ``match_condition``.)
 
-    On a manifest table ``updates`` is evaluated once per MERGE, as
-    Delta's ``merge.materializeSource`` does: the prune pass and the
+    ``updates`` is evaluated once per MERGE, as Delta's
+    ``merge.materializeSource`` does: the prune pass and the
     write read one materialized copy (see :func:`_m_merge_plan`), so an
     expensive or nondeterministic source runs once.
     """
     if evolve_schema and match_condition is not None:
         raise ValueError("match_condition with evolve_schema is unsupported")
-    if _is_manifest_table(path):
-        return _m_merge_upsert(
-            spark, path, updates, keys, evolve_schema, match_condition
-        )
-    base = latest_version(path)
-    tgt = read_table(spark, path, version=base)
-    # Partition-level copy-on-write (tables created with partition_by):
-    # touched partitions = where updates LAND (their own partition
-    # values) ∪ where matched target keys LIVE (an update may move a
-    # row across partitions — the old partition must be rewritten too).
-    # Only those partitions join the merge; the rest hardlink over.
-    # evolve_schema forces the full rewrite: carried-over files would
-    # lack the new columns and plain parquet reads don't schema-merge.
-    pcols = table_meta(path).get("partition_by")
-    cow = None
-    if pcols is not None and not evolve_schema:
-        missing = [c for c in pcols if c not in updates.columns]
-        if missing:
-            raise ValueError(
-                f"updates must carry partition column(s) {missing}"
-            )
-        # metadata-sized collect: distinct partition values of the
-        # update set — bounded by the partition dimension, not the data
-        touched = {
-            tuple(r) for r in updates.select(*pcols).distinct().collect()
-        } | {
-            tuple(r)
-            # metadata-sized collect: partitions holding matched keys
-            for r in tgt.join(updates.select(*keys), keys, "left_semi")
-            .select(*pcols)
-            .distinct()
-            .collect()
-        }
-        cow = _cow_plan(path, base, pcols, touched)
-        file_links: list[str] = []
-        if cow is not None:
-            # FILE-level manifest pruning inside the touched partitions
-            # (single-key merges): footer min/max stats prove which
-            # data files cannot contain a matched key — those hardlink
-            # over like untouched partitions, and the rewrite input
-            # shrinks to exactly the possibly-matching files (read with
-            # basePath so partition columns reconstruct). Insert-heavy
-            # CDC merges thus rewrite almost nothing: new rows write,
-            # everything else links.
-            snap = _snapshot_dir(path, base)
-            touched_rels = sorted(
-                _leaf_partition_rels(snap, pcols) - set(cow[0])
-            )
-            fsplit = None
-            if len(keys) == 1:
-                row = updates.agg(
-                    F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi")
-                ).first()
-                fsplit = _file_cow_split(
-                    snap, touched_rels, keys[0], row["lo"], row["hi"]
-                )
-            if fsplit is not None:
-                file_links, rewrite_paths = fsplit
-                if rewrite_paths:
-                    tgt = (
-                        spark.read.option("basePath", snap)
-                        .parquet(*rewrite_paths)
-                        .select(*tgt.columns)
-                    )
-                else:
-                    tgt = spark.createDataFrame([], tgt.schema)
-            else:
-                tgt = tgt.filter(cow[1])
-    merged = _merged_frame(tgt, updates, keys, evolve_schema, match_condition)
-    if cow is not None:
-        return _write_next(
-            merged,
-            path,
-            base=base,
-            partition_by=pcols,
-            carry_from=_snapshot_dir(path, base),
-            carry_rels=cow[0] + file_links,
-        )
-    # full rewrite (unpartitioned table, unsafe partition values, or
-    # evolve_schema) — a partitioned table KEEPS its layout either way:
-    # a flat snapshot would break every later copy-on-write plan
-    return _write_next(merged, path, base=base, partition_by=pcols)
+    return _m_merge_upsert(
+        spark, path, updates, keys, evolve_schema, match_condition
+    )
 
 
 def delete_where(spark: SparkSession, path: str, cond) -> int:
@@ -3894,34 +3387,11 @@ def delete_where(spark: SparkSession, path: str, cond) -> int:
     Returns the new version number.
 
     On a partitioned table only partitions that actually contain
-    matching rows are rewritten (the rest hardlink over) — and when
+    matching rows are rewritten (the rest carry by reference) — and when
     ``cond`` references the partition column, Catalyst partition-prunes
     the touched-value scan itself, so a partition-aligned delete never
     reads the untouched data at all."""
-    if _is_manifest_table(path):
-        return _m_delete_where(spark, path, cond)
-    base = latest_version(path)
-    tgt = read_table(spark, path, version=base)
-    hit = F.coalesce(cond, F.lit(False))
-    keep = ~hit
-    pcols = table_meta(path).get("partition_by")
-    if pcols is not None:
-        touched = {
-            tuple(r)
-            # metadata-sized collect: partitions containing deleted rows
-            for r in tgt.filter(hit).select(*pcols).distinct().collect()
-        }
-        cow = _cow_plan(path, base, pcols, touched)
-        if cow is not None:
-            return _write_next(
-                tgt.filter(cow[1]).filter(keep),
-                path,
-                base=base,
-                partition_by=pcols,
-                carry_from=_snapshot_dir(path, base),
-                carry_rels=cow[0],
-            )
-    return _write_next(tgt.filter(keep), path, base=base, partition_by=pcols)
+    return _m_delete_where(spark, path, cond)
 
 
 def append_table(spark: SparkSession, path: str, df: DataFrame) -> int:
@@ -3936,40 +3406,27 @@ def append_table(spark: SparkSession, path: str, df: DataFrame) -> int:
     appended entries get this commit's ``seq``, so
     ``scan_table(since=...)`` reads exactly the files added after a
     checkpoint version. Schema must match the table's (same columns;
-    use MERGE with ``evolve_schema`` to widen). Posix tables fall back
-    to a full snapshot rewrite (their snapshot layout has no
-    entry-union commit) — the manifest protocol is the right tool for
-    ingest cadence."""
+    use MERGE with ``evolve_schema`` to widen)."""
     base = latest_version(path)
-    if _is_manifest_table(path):
-        m = _m_load(path, base)
-        pcols = m.get("partition_by")
-        tf = m.get("transforms")
-        if tf:  # appenders never name hidden columns; derive them
-            df = _apply_transforms(df, tf)
-        cols = [f["name"] for f in m["schema"]["fields"]]
-        if set(df.columns) != set(cols):
-            raise ValueError(
-                f"append schema {sorted(df.columns)} != table schema "
-                f"{sorted(cols)}; use merge_upsert(evolve_schema=True)"
-            )
-        return _m_commit(
-            df.select(*cols),
-            path,
-            base + 1,
-            pcols,
-            _m_entries(path, m),
-            base=base,
-            deletes=m.get("deletes", []),
-            op={"name": "APPEND", "dataChange": True},
+    m = _m_load(path, base)
+    tf = m.get("transforms")
+    if tf:  # appenders never name hidden columns; derive them
+        df = _apply_transforms(df, tf)
+    cols = [f["name"] for f in m["schema"]["fields"]]
+    if set(df.columns) != set(cols):
+        raise ValueError(
+            f"append schema {sorted(df.columns)} != table schema "
+            f"{sorted(cols)}; use merge_upsert(evolve_schema=True)"
         )
-    tgt = read_table(spark, path, version=base)
-    pcols = table_meta(path).get("partition_by")
-    return _write_next(
-        tgt.unionByName(df.select(*tgt.columns)),
+    return _m_commit(
+        df.select(*cols),
         path,
+        base + 1,
+        m.get("partition_by"),
+        _m_entries(path, m),
         base=base,
-        partition_by=pcols,
+        deletes=m.get("deletes", []),
+        op={"name": "APPEND", "dataChange": True},
     )
 
 
@@ -3986,13 +3443,10 @@ def delete_predicate(spark: SparkSession, path: str, pred) -> int:
     AND ts BETWEEN a AND b)`` touches exactly the files its disjuncts
     can reach, O(matching files) not O(table), which is the whole game
     at 100 TB. Sound fallback everywhere: leaves without usable stats
-    keep their files; posix tables fall back to the partition-COW
-    :func:`delete_where` on the compiled Column. NULL-evaluating rows
-    are KEPT (SQL DELETE semantics). Returns the new version."""
+    keep their files. NULL-evaluating rows are KEPT (SQL DELETE
+    semantics). Returns the new version."""
     pred = _pred_resolve(pred)
     cond = _pred_column(pred)
-    if not _is_manifest_table(path):
-        return delete_where(spark, path, cond)
     base = latest_version(path)
     m = _m_load(path, base)
     pcols = m.get("partition_by")
@@ -4044,45 +3498,18 @@ def update_where(
     ``cond`` get ``assignments`` (column → Column expression or
     literal; right-hand sides see pre-update values) and everything
     else carries over — on a partitioned table only partitions holding
-    matched rows rewrite (manifest: by entry reference; posix: by
-    hardlink), the same COW planning as :func:`delete_where`. An
-    assignment MAY write a partition column; the updated rows simply
-    land in their new partition's files while the sources rewrite.
+    matched rows rewrite (the rest carry by entry reference), the same
+    COW planning as :func:`delete_where`. An assignment MAY write a
+    partition column; the updated rows simply land in their new
+    partition's files while the sources rewrite.
     Returns the new version."""
-    if _is_manifest_table(path):
-        base = latest_version(path)
-        rew, carry, pcols, dels = _m_update_plan(
-            spark, path, base, cond, assignments
-        )
-        return _m_commit(
-            rew, path, base + 1, pcols, carry, base=base, deletes=dels,
-            op={"name": "UPDATE", "dataChange": True},
-        )
     base = latest_version(path)
-    tgt = read_table(spark, path, version=base)
-    hit = F.coalesce(cond, F.lit(False))
-    pcols = table_meta(path).get("partition_by")
-    if pcols is not None:
-        touched = {
-            tuple(r)
-            # metadata-sized collect: partitions containing matched rows
-            for r in tgt.filter(hit).select(*pcols).distinct().collect()
-        }
-        cow = _cow_plan(path, base, pcols, touched)
-        if cow is not None:
-            return _write_next(
-                _updated_frame(tgt.filter(cow[1]), cond, assignments),
-                path,
-                base=base,
-                partition_by=pcols,
-                carry_from=_snapshot_dir(path, base),
-                carry_rels=cow[0],
-            )
-    return _write_next(
-        _updated_frame(tgt, cond, assignments),
-        path,
-        base=base,
-        partition_by=pcols,
+    rew, carry, pcols, dels = _m_update_plan(
+        spark, path, base, cond, assignments
+    )
+    return _m_commit(
+        rew, path, base + 1, pcols, carry, base=base, deletes=dels,
+        op={"name": "UPDATE", "dataChange": True},
     )
 
 
@@ -4132,21 +3559,10 @@ def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame) -> int:
     is one broadcast anti-join per pending delete file;
     :func:`compact` materializes and clears them (the read/write
     trade every merge-on-read format documents). NULL-keyed rows are
-    never matched (SQL anti-join semantics). Posix tables fall back
-    to the copy-on-write anti-join rewrite (same result, no sidecar).
+    never matched (SQL anti-join semantics).
     """
     key_cols = list(keys_df.columns)
     kd = keys_df.dropDuplicates()
-    if not _is_manifest_table(path):
-        base = latest_version(path)
-        tgt = read_table(spark, path, version=base)
-        rew = tgt.join(F.broadcast(kd), key_cols, "left_anti")
-        return _write_next(
-            rew,
-            path,
-            base=base,
-            partition_by=table_meta(path).get("partition_by"),
-        )
     base = latest_version(path)
     m = _m_load(path, base)
     uid = uuid.uuid4().hex
@@ -4204,11 +3620,7 @@ def delete_where_dv(spark: SparkSession, path: str, cond) -> int:
     swallowed. Read overhead is one broadcast anti-join while DVs are
     pending; :func:`compact` materializes and clears them. DVs compose
     with equality deletes, column mapping, and hidden partitioning
-    (the DV is column-agnostic). Posix tables fall back to the
-    copy-on-write rewrite (same result, no sidecar). Returns the new
-    version."""
-    if not _is_manifest_table(path):
-        return delete_where(spark, path, cond)
+    (the DV is column-agnostic). Returns the new version."""
     base = latest_version(path)
     m, entries, pos_deletes, ddir = _m_dv_plan(spark, path, base, cond)
     try:
@@ -4317,49 +3729,20 @@ def delete_range(
     spark: SparkSession, path: str, col: str, lo, hi
 ) -> int:
     """DELETE WHERE ``col BETWEEN lo AND hi`` with FILE-level manifest
-    pruning: parquet footer min/max stats on ``col`` prove which data
-    files contain no row in the deleted interval — those hardlink over
-    untouched (across ALL partitions), and only the intersecting files
-    are read back and rewritten with the keep filter. The explicit
-    interval form exists because a general ``delete_where`` predicate
-    can't be evaluated against footer stats; range deletes (retention
-    windows, backfill corrections) are the shape that can. Falls back
-    to :func:`delete_where` whenever stats are unusable. Result is
-    row-identical to ``delete_where(col BETWEEN lo AND hi)``
+    pruning: the min/max stats each manifest entry records for ``col``
+    prove which data files contain no row in the deleted interval —
+    those carry by reference untouched (across ALL partitions), and
+    only the intersecting files are read back and rewritten with the
+    keep filter. The explicit interval form exists because a general
+    ``delete_where`` predicate can't be evaluated against min/max
+    stats; range deletes (retention windows, backfill corrections) are
+    the shape that can. Falls back to :func:`delete_where`'s plan
+    whenever the stats are unusable.
+    Result is row-identical to ``delete_where(col BETWEEN lo AND hi)``
     (NULL ``col`` rows are kept, SQL DELETE semantics — a NULL never
-    matches BETWEEN). On a manifest table the pruning reads NO parquet
-    footers at all — the intervals come from the manifest entries."""
-    if _is_manifest_table(path):
-        return _m_delete_range(spark, path, col, lo, hi)
-    base = latest_version(path)
-    tgt = read_table(spark, path, version=base)
-    between = F.col(col).between(F.lit(lo), F.lit(hi))
-    pcols = table_meta(path).get("partition_by")
-    snap = _snapshot_dir(path, base)
-    leaves = sorted(_leaf_partition_rels(snap, pcols)) if pcols else [""]
-    split = _file_cow_split(snap, leaves, col, lo, hi)
-    if split is None:
-        return delete_where(spark, path, between)
-    link_rels, rewrite_paths = split
-    keep = ~F.coalesce(between, F.lit(False))
-    if rewrite_paths:
-        cols = tgt.columns
-        rewrite = (
-            spark.read.option("basePath", snap)
-            .parquet(*rewrite_paths)
-            .select(*cols)
-            .filter(keep)
-        )
-    else:
-        rewrite = spark.createDataFrame([], tgt.schema)
-    return _write_next(
-        rewrite,
-        path,
-        base=base,
-        partition_by=pcols,
-        carry_from=snap,
-        carry_rels=link_rels,
-    )
+    matches BETWEEN). Planning reads NO parquet footers at all — the
+    intervals come from the manifest entries."""
+    return _m_delete_range(spark, path, col, lo, hi)
 
 
 def compact(
@@ -4409,20 +3792,16 @@ def compact(
         out = tgt.repartition(target_files)
     # a partitioned table keeps its layout (target_files becomes
     # files-per-partition rather than a global count)
-    if _is_manifest_table(path):
-        m = _m_load(path, base)
-        # the rewrite materializes equality deletes AND positional DVs
-        # (read_table applied them) — clear both
-        return _m_commit(
-            out, path, base + 1, m.get("partition_by"), [], base=base,
-            pos_deletes=[],
-            op={
-                "name": "ZORDER" if zorder_code is not None else "COMPACT",
-                "dataChange": False,
-            },
-        )
-    return _write_next(
-        out, path, base=base, partition_by=table_meta(path).get("partition_by")
+    m = _m_load(path, base)
+    # the rewrite materializes equality deletes AND positional DVs
+    # (read_table applied them) — clear both
+    return _m_commit(
+        out, path, base + 1, m.get("partition_by"), [], base=base,
+        pos_deletes=[],
+        op={
+            "name": "ZORDER" if zorder_code is not None else "COMPACT",
+            "dataChange": False,
+        },
     )
 
 
@@ -4494,11 +3873,6 @@ def _compact_small(
 
     Scale note: cost is O(bytes-under-threshold) + one manifest
     publish. The carried set is never opened, listed, or hashed."""
-    if not _is_manifest_table(path):
-        raise ValueError(
-            "selective compaction plans from manifest file sizes; "
-            "posix tables use the full compact()"
-        )
     base = latest_version(path)
     m, carry, out = _compact_small_plan(
         spark, path, base, min_file_bytes, target_file_bytes
@@ -4536,30 +3910,8 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
     may be gone — the retention trade); restoring to the current head
     is a no-op commit that still advances the version, matching Delta
     (RESTORE always lands a commit, so the audit trail records the
-    intent). Posix-protocol tables restore by hardlink carry — same
-    zero-copy property, posix-only."""
+    intent)."""
     head = latest_version(path)
-    if not _is_manifest_table(path):
-        if version not in versions(path):
-            raise ValueError(
-                f"version {version} of {path} was vacuumed or never "
-                "committed; cannot restore"
-            )
-        # same publish discipline as every posix commit: hardlink the
-        # restored snapshot into a temp dir (invisible to versions()),
-        # then ONE atomic rename — a crash mid-link leaves only an
-        # unlisted .tmp dir, never a torn snapshot
-        tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}")
-        _link_tree(_snapshot_dir(path, version), tmp)
-        try:
-            os.rename(tmp, _snapshot_dir(path, head + 1))
-        except OSError as exc:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"version {head + 1} of {path} was committed "
-                "concurrently (stale base); re-read and retry"
-            ) from exc
-        return head + 1
     try:
         m = _m_load(path, version)
     except FileNotFoundError:
@@ -4650,17 +4002,13 @@ def table_diff(
     whole-row compare in one codegen'd expression. ``keys`` must be
     unique per row in each snapshot.
 
-    On a manifest table only the entries that differ are read: the
-    files one version lists and the other does not, and the files both
-    list whose applicable delete records changed (see
-    :func:`_m_diff_sides`). A one-file MERGE step thus reads the file
-    it removed and the files it added, not two whole snapshots.
+    Only the entries that differ are read: the files one version lists
+    and the other does not, and the files both list whose applicable
+    delete records changed (see :func:`_m_diff_sides`). A one-file
+    MERGE step thus reads the file it removed and the files it added,
+    not two whole snapshots.
     """
-    if _is_manifest_table(path):
-        a, b = _m_diff_sides(spark, path, v_from, v_to)
-    else:
-        a = read_table(spark, path, version=v_from)
-        b = read_table(spark, path, version=v_to)
+    a, b = _m_diff_sides(spark, path, v_from, v_to)
     cols = a.columns
     if set(cols) != set(b.columns):
         raise ValueError(
@@ -4683,23 +4031,9 @@ def table_diff(
 
 
 def data_files(path: str, version: int) -> list[str]:
-    """Parquet data files of one committed version. Manifest tables:
-    table-relative paths straight from the manifest (the file list IS
-    the version). Posix tables: snapshot-relative paths; recursive, so
-    partitioned snapshots list the files inside their ``col=value``
-    directories."""
-    if _is_manifest_table(path):
-        return sorted(
-            e["path"]
-            for e in _m_entries(path, _m_load(path, version))
-        )
-    d = _snapshot_dir(path, version)
-    out = []
-    for root, _dirs, files in os.walk(d):
-        for f in files:
-            if f.endswith(".parquet"):
-                out.append(os.path.relpath(os.path.join(root, f), d))
-    return sorted(out)
+    """Parquet data files of one committed version: table-relative
+    paths straight from the manifest (the file list IS the version)."""
+    return sorted(e["path"] for e in _m_entries(path, _m_load(path, version)))
 
 
 def vacuum(
@@ -4707,58 +4041,51 @@ def vacuum(
 ) -> list[int]:
     """Drop all but the newest ``keep_last`` committed versions;
     returns the removed version numbers. ``grace_seconds`` (default
-    :data:`DEFAULT_GC_GRACE_SECONDS`) is the manifest-protocol GC
-    retention grace window — unreferenced data files younger than it
-    survive the sweep so an in-flight commit's unpublished files are
-    never collected (see :func:`_m_gc_files`); pass ``0`` for
-    immediate reclamation when no concurrent writer can exist.
+    :data:`DEFAULT_GC_GRACE_SECONDS`) is the GC retention grace window
+    — unreferenced data files younger than it survive the sweep so an
+    in-flight commit's unpublished files are never collected (see
+    :func:`_m_gc_files`); pass ``0`` for immediate reclamation when no
+    concurrent writer can exist.
 
-    Safe against the copy-on-write carries in both protocols. Manifest
-    tables: the dropped manifests are unlinked, then data files no
-    surviving manifest references are garbage-collected — reference
-    counting by PATH, which is what an object store can express (see
-    :func:`_m_vacuum`). Posix tables: shared data files are HARDLINKS,
-    so removing an old snapshot directory only decrements their link
-    count — every file still referenced by a surviving snapshot stays
-    on disk untouched. Time travel to a
+    Safe against copy-on-write carries: the dropped manifests are
+    unlinked, then data files no surviving manifest (of this table, its
+    branches or its registered shallow clones) references are
+    garbage-collected — reference counting by PATH, which is what an
+    object store can express (see :func:`_m_vacuum`). Time travel to a
     vacuumed version subsequently raises (the retention trade every
-    real format makes); latest-version reads are unaffected. The
-    removal is per-directory ``rmtree`` of already-superseded
-    snapshots. A writer whose BASE snapshot gets vacuumed mid-commit
-    (it lost the optimistic race and then retention collected its
-    base) surfaces as :class:`ConcurrentWriteError` from the commit's
-    carry path — stale base, retry — not as corruption; aggressive
-    ``keep_last=1`` retention under concurrent writers simply forces
-    those retries, the same trade Delta's ``VACUUM RETAIN 0`` makes.
+    real format makes); latest-version reads are unaffected. A writer
+    whose BASE version gets vacuumed mid-commit (it lost the optimistic
+    race and then retention collected its base) surfaces as
+    :class:`ConcurrentWriteError` from the commit — stale base, retry —
+    not as corruption; aggressive ``keep_last=1`` retention under
+    concurrent writers simply forces those retries, the same trade
+    Delta's ``VACUUM RETAIN 0`` makes. A path holding no committed
+    version raises ``FileNotFoundError`` and nothing is removed.
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    if _is_manifest_table(path):
-        return _m_vacuum(path, keep_last, grace_seconds=grace_seconds)
-    vs = versions(path)
-    drop = vs[:-keep_last]
-    for v in drop:
-        shutil.rmtree(_snapshot_dir(path, v), ignore_errors=True)
-    return drop
+    # raises on a path that holds no table: the GC must never sweep
+    # the data/ directory of something else (an Iceberg table has one)
+    latest_version(path)
+    return _m_vacuum(path, keep_last, grace_seconds=grace_seconds)
 
 
 def history(spark: SparkSession, path: str) -> DataFrame:
     """Table history as a DataFrame: (version, n_files, op) — ``op``
     is the commit's operation stamp (r15; Delta's DESCRIBE HISTORY
     operation column): WRITE / APPEND / MERGE / DELETE / UPDATE /
-    COMPACT / … , NULL for pre-r15 commits and posix snapshots."""
-    ops: dict[int, str | None] = {}
+    COMPACT / … , NULL for pre-r15 commits. Each manifest is loaded
+    once; a version vacuumed between the listing and its load is
+    skipped, as :func:`commit_timestamps` does."""
+    rows = []
     for v in versions(path):
-        op = None
-        if _is_manifest_table(path):
-            try:
-                op = (_m_load(path, v).get("op") or {}).get("name")
-            except FileNotFoundError:
-                op = None
-        ops[v] = op
-    rows = [
-        (v, len(data_files(path, v)), ops[v]) for v in versions(path)
-    ]
+        try:
+            m = _m_load(path, v)
+        except FileNotFoundError:
+            continue  # vacuumed between the listing and the load
+        rows.append(
+            (v, len(_m_entries(path, m)), (m.get("op") or {}).get("name"))
+        )
     return spark.createDataFrame(
         rows, "version int, n_files int, op string"
     )
@@ -4797,12 +4124,10 @@ def changes(
     span = [v for v in vs if lo <= v <= hi]
     if len(span) < 2:
         raise ValueError(f"need at least two versions in [{lo}, {hi}]")
-    manifest = _is_manifest_table(path)
     out = None
     for a, b in zip(span, span[1:]):
         if (
-            manifest
-            and b == a + 1
+            b == a + 1
             and (_m_load(path, b).get("op") or {}).get("dataChange", True)
             is False
         ):
@@ -4932,7 +4257,7 @@ def read_changes_stream(
 
 
 # ---------------------------------------------------------------------------
-# Branch refs + write-audit-publish (manifest protocol only)
+# Branch refs + write-audit-publish
 #
 # A branch is a FULL manifest-table root under <table>/_branches/<name>/
 # whose fork manifest references the parent's data files by ABSOLUTE
@@ -5053,13 +4378,8 @@ def create_branch(
     """Fork a branch from the table's ``at_version`` (default: head)
     and return the branch root path. Metadata-only: the branch's v=0
     manifest lists the fork snapshot's files by reference (absolute
-    paths into the parent); no data is copied. Manifest protocol only;
-    branching a branch is rejected (fork from the table instead)."""
-    if not _is_manifest_table(path):
-        raise ValueError(
-            f"{path} is not a manifest-protocol table (branches need "
-            "manifest commits; posix tables have no ref store)"
-        )
+    paths into the parent); no data is copied. Branching a branch is
+    rejected (fork from the table instead)."""
     if _is_branch_root(path):
         raise ValueError(
             f"{path} is itself a branch; fork a new branch from the table"
@@ -5330,13 +4650,7 @@ def clone_table(path: str, dst: str) -> int:
     the clone directory is how you drop a clone — its stale marker is
     retired on the source's next GC pass.
 
-    Manifest protocol only (posix tables have no by-reference store).
     Returns the clone's version number (always 0)."""
-    if not _is_manifest_table(path):
-        raise ValueError(
-            f"{path} is not a manifest-protocol table (shallow clones "
-            "need by-reference manifests)"
-        )
     dst = os.path.abspath(dst)
     src = os.path.abspath(path)
     if os.path.exists(dst) and os.listdir(dst):

@@ -142,13 +142,6 @@ def test_bloom_keys_validation(spark, tmp_path):
         lake.write_table(df, str(tmp_path / "a"), bloom_keys="d")
     with pytest.raises(ValueError, match="Bloom key material"):
         lake.write_table(df, str(tmp_path / "b"), bloom_keys="zz")
-    with pytest.raises(ValueError, match="posix"):
-        lake.write_table(
-            spark.range(5).select(F.col("id").alias("k")),
-            str(tmp_path / "c"),
-            protocol="posix",
-            bloom_keys="k",
-        )
 
 
 def test_merge_prunes_by_bloom_and_stays_correct(spark, tmp_path):

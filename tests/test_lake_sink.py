@@ -714,9 +714,10 @@ def test_source_vacuumed_prev_is_loud(reg, tmp_path):
 
 
 def test_auto_created_table_has_table_meta(reg, tmp_path):
-    """Sink-created tables must write _table.json so engine verbs see
-    partition_by (review r13: without it, MERGE/DELETE lose
-    partition-level COW on sink-created tables)."""
+    """Sink-created tables must record partition_by in their v0
+    manifest, where table_meta and every engine verb read it (review
+    r13: without it, MERGE/DELETE lose partition-level COW on
+    sink-created tables)."""
     p = str(tmp_path / "fresh")
     reg.range(9).select(
         F.col("id").alias("k"), (F.col("id") % 3).alias("g")

@@ -50,8 +50,6 @@ def main() -> int:
     # table birth: v0 with one entry (pure-python write_table twin —
     # the probe measures METADATA cost, so no SparkSession is needed)
     os.makedirs(os.path.join(path, "data"), exist_ok=True)
-    with open(os.path.join(path, "_table.json"), "w") as f:
-        json.dump({"partition_by": None, "protocol": "manifest"}, f)
     schema_json = {
         "type": "struct",
         "fields": [
