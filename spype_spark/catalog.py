@@ -226,12 +226,7 @@ class Catalog:
             st = self.state(txn)
         if name not in st:
             raise FileNotFoundError(f"no table {name!r} in catalog state")
-        path = self.table_path(name)
-        df = lake._m_read(spark, path, st[name])
-        tf = lake._m_load(path, st[name]).get("transforms")
-        if tf:  # hidden partition columns never reach a reader
-            df = df.drop(*[t["name"] for t in tf])
-        return df
+        return lake._m_snapshot(spark, self.table_path(name), st[name])
 
     def scan(
         self,
@@ -808,13 +803,9 @@ class Transaction:
 
     def read(self, name: str) -> DataFrame:
         """Read-your-writes snapshot read inside the transaction."""
-        path = self.cat.table_path(name)
-        v = self._resolve(name)
-        df = lake._m_read(self.spark, path, v)
-        tf = lake._m_load(path, v).get("transforms")
-        if tf:  # hidden partition columns never reach a reader
-            df = df.drop(*[t["name"] for t in tf])
-        return df
+        return lake._m_snapshot(
+            self.spark, self.cat.table_path(name), self._resolve(name)
+        )
 
     # -- staging --------------------------------------------------------
     _INHERIT = object()  # sentinel: take the value from the base manifest
@@ -849,14 +840,17 @@ class Transaction:
         conflict detection only ever claims disjointness it can prove.
 
         ``transforms`` / ``pos_deletes`` default to INHERITING the base
-        manifest's values (mirroring ``lake._m_commit``): hidden
+        manifest's values (as ``lake._m_commit`` does): hidden
         partition transforms persist across every staged verb and the
         hidden columns are force re-derived on staged rows, and
         positional deletion vectors ride forward so carried files keep
         their DV-deleted rows suppressed (rewritten files get this
         slot's seq, which outranks every older DV — the same sequence
         rule as the lake path). Verbs that semantically RESET either
-        one (full REPLACE, compaction) pass an explicit value."""
+        one (full REPLACE, compaction) pass an explicit value.
+
+        New files go through the write seam ``lake._m_commit`` shares
+        (``lake._m_write_new``); only the publish policy differs."""
         datadir, entries = (None, [])
         base_schema, retired, constraints = None, [], None
         bloom_keys = None
@@ -887,27 +881,10 @@ class Transaction:
         if bloom_keys_override is not None:
             bloom_keys = bloom_keys_override or None
         if df is not None:
-            # same write seam as lake._m_commit: CHECK constraints
-            # enforced on the staged rows, then the base's column
-            # mapping (frozen physical names) and retired-name set
-            lake._enforce_constraints(df, constraints)
-            if transforms:
-                # force re-derive hidden partition columns so a staged
-                # UPDATE on a transform source can never leave a stale
-                # hidden value — same invariant as lake._m_commit
-                df = lake._apply_transforms(df, transforms, force=True)
-            pdf, ppcols, schema_json, inv = lake._m_prepare_write(
-                df, pcols, base_schema, retired
+            datadir, entries, schema_json = lake._m_write_new(
+                df, path, pcols, base_schema, retired, constraints,
+                transforms, bloom_keys,
             )
-            datadir, entries = lake._m_write_files(pdf, path, ppcols)
-            if bloom_keys:
-                # same Bloom stamp seam as lake._m_commit: probe the
-                # new files under their PHYSICAL names, localize after
-                cmap = {l: p for p, l in inv.items()}
-                lake._m_attach_blooms(
-                    path, entries, [cmap.get(c, c) for c in bloom_keys]
-                )
-            lake._m_localize_entries(entries, inv)
         elif schema_json is None:
             schema_json = base_schema
         while True:
@@ -1146,6 +1123,33 @@ class Transaction:
         self._staged[name] = v
         return v
 
+    def _stage_plan(self, name: str, planner, *args) -> int:
+        """Plan one DML verb at the transaction's snapshot of ``name``
+        with the lakehouse planner ``lake.<verb>`` uses, then stage
+        it. A planner returning None (a no-op) stages nothing."""
+        self._check_open()
+        path = self.cat.table_path(name)
+        base = self._resolve(name)
+        plan = planner(self.spark, path, base, *args)
+        if plan is None:
+            return base
+        try:
+            v = self._stage(
+                plan.df, path, plan.m.get("partition_by"), plan.carry, base,
+                deletes=plan.deletes, mode=plan.mode,
+                pos_deletes=plan.pos_deletes,
+                # data-changing staged manifests keep the TXN_COMMIT
+                # stamp; maintenance (dataChange=false) keeps its own so
+                # the change feed skips it at plan time
+                op=None if plan.op["dataChange"] else plan.op,
+            )
+        except ConcurrentWriteError:
+            if plan.sidecar:
+                shutil.rmtree(plan.sidecar, ignore_errors=True)
+            raise
+        self._staged[name] = v
+        return v
+
     def merge_upsert(
         self,
         name: str,
@@ -1154,19 +1158,12 @@ class Transaction:
         evolve_schema: bool = False,
         match_condition=None,
     ) -> int:
-        self._check_open()
-        path = self.cat.table_path(name)
-        base = self._resolve(name)
-        merged, carry, pcols, dels = lake._m_merge_plan(
-            self.spark, path, base, updates, keys, evolve_schema,
+        """MERGE upsert through the transaction (see
+        :func:`spype_spark.lakehouse.merge_upsert`)."""
+        return self._stage_plan(
+            name, lake._m_merge_plan, updates, keys, evolve_schema,
             match_condition,
         )
-        v = self._stage(
-            merged, path, pcols, carry, base, deletes=dels,
-            mode="replace",
-        )
-        self._staged[name] = v
-        return v
 
     def merge(
         self,
@@ -1185,8 +1182,7 @@ class Transaction:
         update/delete, conditional insert, not-matched-by-source
         delete/update), staged against the txn's snapshot and committed
         atomically with the rest of the transaction."""
-        self._check_open()
-        lake._validate_merge_clauses(
+        clauses = lake._merge_clauses(
             when_matched,
             matched_condition,
             when_not_matched,
@@ -1194,98 +1190,27 @@ class Transaction:
             by_source_condition,
             not_matched_condition,
         )
-        path = self.cat.table_path(name)
-        base = self._resolve(name)
-        merged, carry, pcols, dels = lake._m_merge_plan(
-            self.spark, path, base, source, keys,
-            clauses={
-                "when_matched": when_matched,
-                "matched_condition": matched_condition,
-                "when_not_matched": when_not_matched,
-                "when_not_matched_by_source": when_not_matched_by_source,
-                "by_source_condition": by_source_condition,
-                "not_matched_condition": not_matched_condition,
-            },
+        return self._stage_plan(
+            name, lake._m_merge_plan, source, keys, False, None, clauses
         )
-        v = self._stage(
-            merged, path, pcols, carry, base, deletes=dels,
-            mode="replace",
-        )
-        self._staged[name] = v
-        return v
 
     def delete_where(self, name: str, cond) -> int:
-        self._check_open()
-        path = self.cat.table_path(name)
-        base = self._resolve(name)
-        rew, carry, pcols, dels = lake._m_delete_plan(
-            self.spark, path, base, cond
-        )
-        v = self._stage(
-            rew, path, pcols, carry, base, deletes=dels, mode="replace",
-        )
-        self._staged[name] = v
-        return v
+        """Copy-on-write DELETE through the transaction (see
+        :func:`spype_spark.lakehouse.delete_where`)."""
+        return self._stage_plan(name, lake._m_rewrite_plan, cond)
 
     def update_where(self, name: str, cond, assignments: dict) -> int:
         """SQL UPDATE through the transaction (see
         :func:`spype_spark.lakehouse.update_where`)."""
-        self._check_open()
-        path = self.cat.table_path(name)
-        base = self._resolve(name)
-        rew, carry, pcols, dels = lake._m_update_plan(
-            self.spark, path, base, cond, assignments
+        return self._stage_plan(
+            name, lake._m_rewrite_plan, cond, assignments
         )
-        v = self._stage(
-            rew, path, pcols, carry, base, deletes=dels, mode="replace",
-        )
-        self._staged[name] = v
-        return v
 
     def delete_keys(self, name: str, keys_df: DataFrame) -> int:
         """Merge-on-read equality DELETE through the transaction (see
         :func:`spype_spark.lakehouse.delete_keys`): records a key file
         + manifest delete entry, carries every data entry untouched."""
-        self._check_open()
-        import uuid as _uuid
-
-        path = self.cat.table_path(name)
-        base = self._resolve(name)
-        m = lake._m_load(path, base)
-        key_cols = list(keys_df.columns)
-        uid = _uuid.uuid4().hex
-        ddir = os.path.join(path, "data", uid)
-        keys_df.dropDuplicates().coalesce(1).write.parquet(ddir)
-        new_dels = []
-        for root, _dirs, files in os.walk(ddir):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    fp = os.path.join(root, fn)
-                    new_dels.append(
-                        {
-                            "path": os.path.relpath(fp, path).replace(
-                                os.sep, "/"
-                            ),
-                            "keys": key_cols,
-                            "rows": lake._m_file_stats(fp)["rows"],
-                        }
-                    )
-        new_dels.sort(key=lambda d: d["path"])
-        carry = lake._m_entries(path, m)
-        # seq = base+1 is valid WHATEVER slot staging lands on: it
-        # exceeds every carried entry's seq (all ≤ base, so the delete
-        # applies to them) and no future commit can stamp entries at or
-        # below it (future slots are > this staged slot ≥ base+1, so
-        # re-inserted keys stay untouched) — the only two ordering
-        # facts the sequence rule needs.
-        deletes = m.get("deletes", []) + [
-            {**d, "seq": base + 1} for d in new_dels
-        ]
-        v = self._stage(
-            None, path, m.get("partition_by"), carry, base, deletes=deletes
-        )
-        self._staged[name] = v
-        return v
+        return self._stage_plan(name, lake._m_keys_plan, keys_df)
 
     def delete_where_dv(self, name: str, cond) -> int:
         """MERGE-ON-READ positional DELETE (deletion vectors) through
@@ -1296,27 +1221,7 @@ class Transaction:
         rest of the transaction. Full-table conflict footprint (a
         positional delete's row identities can't be proven
         partition-local against an unseen concurrent rewrite)."""
-        self._check_open()
-        path = self.cat.table_path(name)
-        base = self._resolve(name)
-        m, entries, pos_deletes, ddir = lake._m_dv_plan(
-            self.spark, path, base, cond
-        )
-        try:
-            v = self._stage(
-                None,
-                path,
-                m.get("partition_by"),
-                entries,
-                base,
-                deletes=m.get("deletes", []),
-                pos_deletes=pos_deletes,
-            )
-        except ConcurrentWriteError:
-            shutil.rmtree(ddir, ignore_errors=True)
-            raise
-        self._staged[name] = v
-        return v
+        return self._stage_plan(name, lake._m_dv_plan, cond)
 
     def compact(
         self,
@@ -1334,88 +1239,22 @@ class Transaction:
         path, which records never reference and vacuum would reclaim.
         A selective no-op (fewer than two small files) stages
         nothing."""
-        self._check_open()
-        from spype_spark.layout import zorder_repartition
-
-        path = self.cat.table_path(name)
-        base = self._resolve(name)
-        if min_file_bytes is not None:
-            if zorder_code is not None:
-                raise ValueError(
-                    "ZORDER is a global re-clustering (full rewrite "
-                    "by design); min_file_bytes selective compaction "
-                    "cannot combine with it"
-                )
-            m, carry, out = lake._compact_small_plan(
-                self.spark, path, base, min_file_bytes, target_file_bytes
-            )
-            if out is None:
-                return base  # nothing to pack — stage nothing
-            v = self._stage(
-                out,
-                path,
-                m.get("partition_by"),
-                carry,
-                base,
-                deletes=m.get("deletes", []),
-                op={"name": "OPTIMIZE", "dataChange": False},
-            )
-            self._staged[name] = v
-            return v
-        m = lake._m_load(path, base)
-        tgt = lake._m_read(self.spark, path, base)
-        if zorder_code is not None:
-            out = zorder_repartition(tgt, zorder_code, target_files)
-        else:
-            out = tgt.repartition(target_files)
-        # positional DVs reset: _m_read materialized them into the
-        # rewrite, and nothing is carried for them to apply to
-        v = self._stage(
-            out, path, m.get("partition_by"), [], base, pos_deletes=None,
-            op={
-                "name": "ZORDER" if zorder_code is not None else "COMPACT",
-                "dataChange": False,
-            },
+        return self._stage_plan(
+            name, lake._m_compact_plan, target_files, zorder_code,
+            min_file_bytes, target_file_bytes,
         )
-        self._staged[name] = v
-        return v
 
     def delete_range(self, name: str, col: str, lo, hi) -> int:
-        self._check_open()
-        path = self.cat.table_path(name)
-        base = self._resolve(name)
-        rew, carry, pcols, dels = lake._m_range_plan(
-            self.spark, path, base, col, lo, hi
+        """Range DELETE through the transaction (see
+        :func:`spype_spark.lakehouse.delete_range`)."""
+        return self._stage_plan(
+            name, lake._m_predicate_plan, ("between", col, lo, hi)
         )
-        v = self._stage(
-            rew, path, pcols, carry, base, deletes=dels, mode="replace",
-        )
-        self._staged[name] = v
-        return v
 
     def delete_predicate(self, name: str, pred) -> int:
         """DELETE by predicate spec with general file pruning (see
         :func:`spype_spark.lakehouse.delete_predicate`), staged."""
-        self._check_open()
-        path = self.cat.table_path(name)
-        base = self._resolve(name)
-        pred = lake._pred_resolve(pred)
-        m = lake._m_load(path, base)
-        pcols = m.get("partition_by")
-        entries = lake._m_entries(path, m)
-        maybe = lake._pred_compile(pred, pcols, root=path)
-        carry = [e for e in entries if not maybe(e)]
-        rewrite = [e for e in entries if maybe(e)]
-        keep = ~F.coalesce(lake._pred_column(pred), F.lit(False))
-        rew = lake._m_apply_deletes(
-            self.spark, path, rewrite, m
-        ).filter(keep)
-        v = self._stage(
-            rew, path, pcols, carry, base, deletes=m.get("deletes", []),
-            mode="replace",
-        )
-        self._staged[name] = v
-        return v
+        return self._stage_plan(name, lake._m_predicate_plan, pred)
 
     def append(self, df: DataFrame, name: str) -> int:
         """Blind APPEND (zero reads/rewrites of existing data — see

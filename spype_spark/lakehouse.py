@@ -43,8 +43,8 @@ in the manifest.
 
 from __future__ import annotations
 
+import dataclasses
 import functools
-import hashlib
 import json
 import os
 import re
@@ -55,15 +55,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spype_spark.manifest_log import (  # noqa: F401  (historical aliases)
-    _MANIFEST_RE,
+from spype_spark.manifest_log import (
     m_manifest as _m_manifest,
-    m_part_key as _m_part_key,
-    m_slab_summary as _m_slab_summary,
-    m_write_parts as _m_write_parts,
     _PHYS_KEY,
-    _PART_INLINE_MAX,
-    _SLAB_MAX_GROUPS,
     ConcurrentWriteError,
     col_map as _col_map,
     m_delete_recs as _m_delete_recs,
@@ -79,7 +73,6 @@ from spype_spark.manifest_log import (  # noqa: F401  (historical aliases)
 from spype_spark.bloom import (
     bloom_all_miss as _bloom_all_miss,
     bloom_build as _bloom_build,
-    bloom_might_contain as _bloom_might_contain,
 )
 from spype_spark.planning import lazy_checkpoint
 
@@ -1000,6 +993,45 @@ def _m_write_files(
     return datadir, entries
 
 
+def _m_write_new(
+    df: DataFrame,
+    path: str,
+    pcols: list[str] | None,
+    base_schema: dict | None,
+    retired: list[str] | None,
+    constraints: dict | None,
+    transforms: list[dict] | None,
+    bloom_keys: list[str] | None,
+) -> tuple[str, list[dict], dict]:
+    """The new-file write every commit shares — :func:`_m_commit` and
+    the catalog transaction's staging both call it. Enforces the CHECK
+    constraints on ``df``, re-derives the hidden partition columns,
+    writes under the base's column mapping, stamps Bloom filters and
+    rekeys the entries to logical names. Returns ``(datadir, entries,
+    schema_json)``; the caller stamps ``seq`` and publishes."""
+    _enforce_constraints(df, constraints)
+    if transforms:
+        # (re)derive the hidden partition columns: force recompute
+        # so a mutated source value (UPDATE on a timestamp) can
+        # never leave a stale hidden value — the commit-side
+        # invariant hidden partitioning rests on
+        df = _apply_transforms(df, transforms, force=True)
+    pdf, ppcols, schema_json, inv = _m_prepare_write(
+        df, pcols, base_schema, retired or []
+    )
+    datadir, entries = _m_write_files(pdf, path, ppcols)
+    if bloom_keys:
+        # entries are keyed PHYSICALLY until localization below —
+        # probe the files under the physical names, then the
+        # rekey renames the bloom dict with stats/nulls
+        cmap = {l: p for p, l in inv.items()}
+        _m_attach_blooms(
+            path, entries, [cmap.get(c, c) for c in bloom_keys]
+        )
+    _m_localize_entries(entries, inv)
+    return datadir, entries, schema_json
+
+
 def _m_commit(
     df: DataFrame | None,
     path: str,
@@ -1065,26 +1097,10 @@ def _m_commit(
         # snapshot schema is unchanged — inherit the base's
         schema_json = base_schema
     if df is not None:
-        _enforce_constraints(df, constraints)
-        if transforms:
-            # (re)derive the hidden partition columns: force recompute
-            # so a mutated source value (UPDATE on a timestamp) can
-            # never leave a stale hidden value — the commit-side
-            # invariant hidden partitioning rests on
-            df = _apply_transforms(df, transforms, force=True)
-        pdf, ppcols, schema_json, inv = _m_prepare_write(
-            df, pcols, base_schema, retired or []
+        datadir, entries, schema_json = _m_write_new(
+            df, path, pcols, base_schema, retired, constraints,
+            transforms, bloom_keys,
         )
-        datadir, entries = _m_write_files(pdf, path, ppcols)
-        if bloom_keys:
-            # entries are keyed PHYSICALLY until localization below —
-            # probe the files under the physical names, then the
-            # rekey renames the bloom dict with stats/nulls
-            cmap = {l: p for p, l in inv.items()}
-            _m_attach_blooms(
-                path, entries, [cmap.get(c, c) for c in bloom_keys]
-            )
-        _m_localize_entries(entries, inv)
         for e in entries:
             e["seq"] = version
     manifest = _m_manifest(
@@ -1152,13 +1168,110 @@ def _m_commit(
     return version
 
 
+@dataclasses.dataclass
+class _Plan:
+    """One DML verb planned against an explicit base manifest ``m``:
+    everything either committer needs — :func:`_m_run` (put-if-absent
+    at ``base + 1``) or the catalog transaction's ``_stage_plan`` (the
+    next free slot, with a conflict footprint). ``df`` holds the rows
+    to write as new files (None → carry-only), ``carry`` the base
+    entries kept by reference. ``deletes`` / ``pos_deletes`` default
+    to the base's cumulative lists. ``sidecar`` is a delete-file
+    directory the plan already wrote; the committer removes it when
+    the commit loses. ``mode`` is the catalog's conflict footprint
+    class (see ``Transaction._stage``)."""
+
+    df: DataFrame | None
+    carry: list[dict]
+    m: dict
+    op: dict
+    mode: str = "replace"
+    deletes: list[dict] | None = None
+    pos_deletes: list[dict] | None = None
+    sidecar: str | None = None
+
+    def __post_init__(self):
+        if self.deletes is None:
+            self.deletes = self.m.get("deletes", [])
+        if self.pos_deletes is None:
+            self.pos_deletes = self.m.get("pos_deletes")
+
+
+def _m_run(spark: SparkSession, path: str, planner, *args) -> int:
+    """Plan one DML verb at the table's latest version and commit it
+    at ``base + 1``. A planner returning None (a no-op) commits
+    nothing and returns the base version."""
+    base = latest_version(path)
+    plan = planner(spark, path, base, *args)
+    if plan is None:
+        return base
+    try:
+        return _m_commit(
+            plan.df, path, base + 1, plan.m.get("partition_by"),
+            plan.carry, base=base, deletes=plan.deletes,
+            pos_deletes=plan.pos_deletes, op=plan.op,
+        )
+    except ConcurrentWriteError:
+        if plan.sidecar:
+            shutil.rmtree(plan.sidecar, ignore_errors=True)
+        raise
+
+
+def _m_write_sidecar(
+    df: DataFrame, path: str, base: int, **fields
+) -> tuple[str, list[dict]]:
+    """Write a delete file — ``df`` coalesced to one parquet under a
+    fresh ``data/<uuid>`` — and return ``(dir, records)``, one record
+    ``{path, **fields, rows, seq}`` per written file, sorted by path.
+
+    ``seq = base + 1`` is valid WHATEVER slot the commit lands on: it
+    exceeds every carried entry's seq (all ≤ base, so the delete
+    applies to them) and no later commit stamps entries at or below it
+    (so re-inserted rows stay untouched) — the only two ordering facts
+    the sequence rule needs."""
+    ddir = os.path.join(path, "data", uuid.uuid4().hex)
+    df.coalesce(1).write.parquet(ddir)
+    recs = []
+    for root, _dirs, files in os.walk(ddir):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                fp = os.path.join(root, fn)
+                recs.append(
+                    {
+                        "path": os.path.relpath(fp, path).replace(
+                            os.sep, "/"
+                        ),
+                        **fields,
+                        "rows": _m_file_stats(fp)["rows"],
+                        "seq": base + 1,
+                    }
+                )
+    return ddir, sorted(recs, key=lambda d: d["path"])
+
+
 def _m_read(spark: SparkSession, path: str, version: int) -> DataFrame:
     m = _m_load(path, version)
     return _m_apply_deletes(spark, path, _m_entries(path, m), m)
 
 
+def _m_snapshot(spark: SparkSession, path: str, version: int) -> DataFrame:
+    """A reader's view of ``version`` from ONE manifest load: pending
+    deletes applied, hidden partition columns dropped. Shared by
+    :func:`read_table` and the catalog's snapshot reads."""
+    m = _m_load(path, version)
+    df = _m_apply_deletes(spark, path, _m_entries(path, m), m)
+    tf = m.get("transforms")
+    if tf:  # hidden partition columns never reach a reader
+        df = df.drop(*[t["name"] for t in tf])
+    return df
+
+
 def _m_apply_deletes(
-    spark: SparkSession, path: str, entries: list[dict], m: dict
+    spark: SparkSession,
+    path: str,
+    entries: list[dict],
+    m: dict,
+    with_pos: bool = False,
 ) -> DataFrame:
     """DataFrame over ``entries`` with the manifest's equality-delete
     files applied by the SEQUENCE rule: a delete (seq = the version
@@ -1176,24 +1289,35 @@ def _m_apply_deletes(
     Explicit leaf-file reads throughout: no partition discovery
     (partition columns are IN the files), explicit schema (absent
     columns — pre-evolution carried files — read as NULL, which is
-    exactly Delta/Iceberg schema-on-read evolution)."""
+    exactly Delta/Iceberg schema-on-read evolution).
+
+    ``with_pos=True`` KEEPS the ``__fname`` / ``__pos`` row-identity
+    columns (see :func:`_m_open_files`) on every row — the input a
+    positional-DV writer needs. Without it a group with no pending DV
+    reads no metadata column at all (the plan of every table read)."""
     from pyspark.sql.types import StructType
 
     if not entries:
         # limit(0): an empty relation the optimizer answers (and prunes
         # joins against) without launching a job
-        return spark.createDataFrame(
-            [], StructType.fromJson(m["schema"])
-        ).limit(0)
+        df = spark.createDataFrame([], StructType.fromJson(m["schema"]))
+        if with_pos:
+            df = df.withColumns(
+                {
+                    "__fname": F.lit(None).cast("string"),
+                    "__pos": F.lit(None).cast("long"),
+                }
+            )
+        return df.limit(0)
     dels = m.get("deletes", [])
     pdels = m.get("pos_deletes", [])
     cols = [f["name"] for f in m["schema"]["fields"]]
 
-    def _read(paths, with_pos=False):
-        return _m_open_files(spark, path, paths, m["schema"], with_pos)
+    def _read(paths, pos):
+        return _m_open_files(spark, path, paths, m["schema"], pos)
 
     if not dels and not pdels:
-        return _read([e["path"] for e in entries])
+        return _read([e["path"] for e in entries], with_pos)
     groups: dict[int, list[str]] = {}
     for e in entries:
         groups.setdefault(e.get("seq", 0), []).append(e["path"])
@@ -1204,18 +1328,16 @@ def _m_apply_deletes(
         # any other operator; same sequence rule as equality deletes
         # (a DV only targets files from OLDER commits)
         pd_here = [d for d in pdels if d["seq"] > s]
+        df = _read(groups[s], with_pos or bool(pd_here))
         if pd_here:
-            df = _read(groups[s], with_pos=True)
             dv = spark.read.schema(_DV_SCHEMA).parquet(
                 *[os.path.join(path, d["path"]) for d in pd_here]
             ).select(
                 F.col("fname").alias("__fname"), F.col("pos").alias("__pos")
             )
-            df = df.join(
-                F.broadcast(dv), ["__fname", "__pos"], "left_anti"
-            ).select(*cols)
-        else:
-            df = _read(groups[s])
+            df = df.join(F.broadcast(dv), ["__fname", "__pos"], "left_anti")
+            if not with_pos:
+                df = df.select(*cols)
         for d in dels:
             if d["seq"] > s:
                 kdf = spark.read.parquet(
@@ -1246,18 +1368,6 @@ def _m_touched_strs(touched_vals: set) -> set[tuple] | None:
             parts.append(sv)
         out.add(tuple(parts))
     return out
-
-
-def _m_read_entries(
-    spark: SparkSession, path: str, entries: list[dict], schema_json: dict
-) -> DataFrame:
-    from pyspark.sql.types import StructType
-
-    if not entries:
-        return spark.createDataFrame([], StructType.fromJson(schema_json))
-    return _m_open_files(
-        spark, path, [e["path"] for e in entries], schema_json
-    )
 
 
 def _m_stats_split(
@@ -1789,29 +1899,6 @@ def _m_cow_entries(
     return carry, touched
 
 
-def _m_merge_upsert(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    keys: list[str],
-    evolve_schema: bool,
-    match_condition,
-) -> int:
-    """Manifest-protocol MERGE: the COW plan is computed from manifest
-    metadata only — partition tuples select the touched entries,
-    manifest min/max stats on a single merge key shrink them further to
-    the possibly-matching files — and carry-over is an entry copy into
-    the new manifest (no link, no data read, no rename)."""
-    base = latest_version(path)
-    merged, carry, pcols, dels = _m_merge_plan(
-        spark, path, base, updates, keys, evolve_schema, match_condition
-    )
-    return _m_commit(
-        merged, path, base + 1, pcols, carry, base=base, deletes=dels,
-        op={"name": "MERGE", "dataChange": True},
-    )
-
-
 def _m_merge_plan(
     spark: SparkSession,
     path: str,
@@ -1821,13 +1908,12 @@ def _m_merge_plan(
     evolve_schema: bool = False,
     match_condition=None,
     clauses: dict | None = None,
-) -> tuple[DataFrame, list[dict], list[str] | None]:
+) -> _Plan:
     """Plan a manifest MERGE against an EXPLICIT base version — the
-    shared engine behind :func:`_m_merge_upsert` (base = table latest)
-    and :class:`spype_spark.catalog.Transaction` (base = the version
-    the catalog's snapshot resolves, which may be older than the
-    table directory's newest slot). Returns
-    ``(merged_df, carry_entries, pcols)`` for the caller to commit.
+    shared engine behind :func:`merge_upsert` and :func:`merge` (base =
+    table latest) and :class:`spype_spark.catalog.Transaction` (base =
+    the version the catalog's snapshot resolves, which may be older
+    than the table directory's newest slot).
 
     The source is evaluated ONCE (Delta's ``merge.materializeSource``):
     the prune pass (partition tuples, key ranges, Bloom probe values)
@@ -1837,9 +1923,12 @@ def _m_merge_plan(
     nondeterministic source consistent: the write can never meet a
     key the prune pass did not see, whose file would then be carried
     and the key duplicated."""
+    if evolve_schema and match_condition is not None:
+        raise ValueError("match_condition with evolve_schema is unsupported")
     updates = lazy_checkpoint(updates)
     m = _m_load(path, base)
     pcols = m.get("partition_by")
+    entries = _m_entries(path, m)
     # tgt is built LAZILY (r15 opt): the pruned paths below replace it
     # with the rewrite-entry subset, so constructing the full-table
     # DataFrame up front paid one multi-file open (a driver listing
@@ -1873,7 +1962,7 @@ def _m_merge_plan(
             raise ValueError(
                 f"updates must carry partition column(s) {missing}"
             )
-        tgt = _m_read(spark, path, base)
+        tgt = _m_apply_deletes(spark, path, entries, m)
         # metadata-sized collect: distinct partition values of the
         # update set ∪ partitions holding matched keys (an update may
         # move a row across partitions — both sides rewrite)
@@ -1887,7 +1976,7 @@ def _m_merge_plan(
             .distinct()
             .collect()
         }
-        plan = _m_cow_entries(_m_entries(path, m), pcols, touched)
+        plan = _m_cow_entries(entries, pcols, touched)
         if plan is not None:
             carry, touched_entries = plan
             rewrite_entries = touched_entries
@@ -1935,13 +2024,12 @@ def _m_merge_plan(
         # files would lack the new columns) and a NOT MATCHED BY
         # SOURCE clause must see every target row — both keep the old
         # path.
-        entries_all = _m_entries(path, m)
         ranges, bvals = _m_merge_prune_material(
             updates, keys, m.get("bloom_keys")
         )
-        split = _m_stats_split_keys(entries_all, ranges)
+        split = _m_stats_split_keys(entries, ranges)
         carry0, rewrite_entries = (
-            split if split is not None else ([], entries_all)
+            split if split is not None else ([], entries)
         )
         # Bloom refinement (r15): runs even when ranges refuted
         # NOTHING — on a hash-distributed key layout every file's
@@ -1956,88 +2044,85 @@ def _m_merge_plan(
             carry = carry0
             tgt = _m_apply_deletes(spark, path, rewrite_entries, m)
     if tgt is None:
-        tgt = _m_read(spark, path, base)
+        tgt = _m_apply_deletes(spark, path, entries, m)
     if clauses is not None:
         merged = _merged_frame_full(tgt, updates, keys, **clauses)
     else:
         merged = _merged_frame(
             tgt, updates, keys, evolve_schema, match_condition
         )
-    return merged, carry or [], pcols, m.get("deletes", [])
+    return _Plan(merged, carry or [], m, {"name": "MERGE", "dataChange": True})
 
 
-def _m_delete_where(spark: SparkSession, path: str, cond) -> int:
-    base = latest_version(path)
-    rew, carry, pcols, dels = _m_delete_plan(spark, path, base, cond)
-    return _m_commit(
-        rew, path, base + 1, pcols, carry, base=base, deletes=dels,
-        op={"name": "DELETE", "dataChange": True},
-    )
-
-
-def _m_delete_plan(
-    spark: SparkSession, path: str, base: int, cond
-) -> tuple[DataFrame, list[dict], list[str] | None]:
-    """Plan a manifest DELETE WHERE against an explicit base version
-    (see :func:`_m_merge_plan` for why the split exists)."""
+def _m_rewrite_plan(
+    spark: SparkSession,
+    path: str,
+    base: int,
+    cond,
+    assignments: dict | None = None,
+) -> _Plan:
+    """Copy-on-write plan of DELETE WHERE ``cond`` (``assignments=None``)
+    or UPDATE … SET ``assignments`` WHERE ``cond`` against an explicit
+    base version (see :func:`_m_merge_plan` for why plans take a base).
+    Both verbs share the shape: on a partitioned table only the
+    partitions holding a ``cond`` row rewrite and the rest carry by
+    reference — when none holds one the plan is carry-only, with no
+    write job — then the rewritten rows are transformed (delete: a
+    filter on ``~cond``; update: :func:`_updated_frame`)."""
     m = _m_load(path, base)
     pcols = m.get("partition_by")
-    tgt = _m_read(spark, path, base)
+    entries = _m_entries(path, m)
+    tgt = _m_apply_deletes(spark, path, entries, m)
     hit = F.coalesce(cond, F.lit(False))
-    keep = ~hit
+    if assignments is None:
+        op = {"name": "DELETE", "dataChange": True}
+
+        def transform(df):
+            return df.filter(~hit)
+    else:
+        op = {"name": "UPDATE", "dataChange": True}
+        unknown = [c for c in assignments if c not in tgt.columns]
+        if unknown:
+            raise ValueError(f"UPDATE of unknown column(s) {unknown}")
+
+        def transform(df):
+            return _updated_frame(df, cond, assignments)
+    carry: list[dict] = []
     if pcols:
         touched = {
             tuple(r)
-            # metadata-sized collect: partitions containing deleted rows
+            # metadata-sized collect: partitions containing matched rows
             for r in tgt.filter(hit).select(*pcols).distinct().collect()
         }
-        plan = _m_cow_entries(_m_entries(path, m), pcols, touched)
+        plan = _m_cow_entries(entries, pcols, touched)
         if plan is not None:
             carry, touched_entries = plan
             if not touched_entries:
-                # no partition holds a deleted row: carry-only commit,
-                # no write job (r15 opt)
-                return None, carry, pcols, m.get("deletes", [])
-            rew = _m_apply_deletes(
-                spark, path, touched_entries, m
-            ).filter(keep)
-            return rew, carry, pcols, m.get("deletes", [])
-    return tgt.filter(keep), [], pcols, m.get("deletes", [])
+                return _Plan(None, carry, m, op)
+            tgt = _m_apply_deletes(spark, path, touched_entries, m)
+    return _Plan(transform(tgt), carry, m, op)
 
 
-def _m_delete_range(
-    spark: SparkSession, path: str, col: str, lo, hi
-) -> int:
-    base = latest_version(path)
-    rew, carry, pcols, dels = _m_range_plan(spark, path, base, col, lo, hi)
-    return _m_commit(
-        rew, path, base + 1, pcols, carry, base=base, deletes=dels,
-        op={"name": "DELETE", "dataChange": True},
-    )
-
-
-def _m_range_plan(
-    spark: SparkSession, path: str, base: int, col: str, lo, hi
-) -> tuple[DataFrame, list[dict], list[str] | None]:
-    """Plan a manifest range DELETE against an explicit base version
-    (see :func:`_m_merge_plan` for why the split exists). Falls back
-    to the general predicate plan when stats are unusable."""
+def _m_predicate_plan(
+    spark: SparkSession, path: str, base: int, pred
+) -> _Plan:
+    """Plan a DELETE by predicate spec against an explicit base (see
+    :func:`delete_predicate`): files whose manifest metadata refutes
+    ``pred`` carry by reference, the rest are read back and
+    row-filtered by the compiled residual. Every file refuted → a
+    carry-only plan, no write job."""
+    pred = _pred_resolve(pred)
     m = _m_load(path, base)
-    pcols = m.get("partition_by")
-    between = F.col(col).between(F.lit(lo), F.lit(hi))
-    split = _m_stats_split(_m_entries(path, m), col, lo, hi)
-    if split is None:
-        return _m_delete_plan(spark, path, base, between)
-    carry, rewrite_entries = split
-    if not rewrite_entries:
-        # every file's range refutes the interval: carry-only commit,
-        # no write job (r15 opt)
-        return None, carry, pcols, m.get("deletes", [])
-    keep = ~F.coalesce(between, F.lit(False))
-    rew = _m_apply_deletes(spark, path, rewrite_entries, m).filter(
-        keep
-    )
-    return rew, carry, pcols, m.get("deletes", [])
+    maybe = _pred_compile(pred, m.get("partition_by"), root=path)
+    carry, rewrite = [], []
+    for e in _m_entries(path, m):
+        (rewrite if maybe(e) else carry).append(e)
+    op = {"name": "DELETE", "dataChange": True}
+    if not rewrite:
+        return _Plan(None, carry, m, op)
+    keep = ~F.coalesce(_pred_column(pred), F.lit(False))
+    rew = _m_apply_deletes(spark, path, rewrite, m).filter(keep)
+    return _Plan(rew, carry, m, op)
 
 
 def _m_vacuum(
@@ -2247,11 +2332,7 @@ def read_table(
             raise ValueError("pass version OR timestamp, not both")
         version = version_at(path, timestamp)
     v = latest_version(path) if version is None else version
-    df = _m_read(spark, path, v)
-    tf = _m_load(path, v).get("transforms")
-    if tf:  # hidden partition columns never reach a reader
-        df = df.drop(*[t["name"] for t in tf])
-    return df
+    return _m_snapshot(spark, path, v)
 
 
 def scan_table(
@@ -3219,14 +3300,16 @@ def _merged_frame_full(
     return out
 
 
-def _validate_merge_clauses(
+def _merge_clauses(
     when_matched,
     matched_condition,
     when_not_matched,
     when_not_matched_by_source,
     by_source_condition,
     not_matched_condition=None,
-) -> None:
+) -> dict:
+    """Validate a full-clause MERGE's clauses (see :func:`merge`) and
+    return them as the ``clauses`` dict :func:`_m_merge_plan` takes."""
     if when_matched not in ("update", "delete", None):
         raise ValueError(f"when_matched must be update/delete/None, "
                          f"got {when_matched!r}")
@@ -3251,6 +3334,14 @@ def _validate_merge_clauses(
         )
     if when_matched is None and when_not_matched is None and bs is None:
         raise ValueError("merge with no clauses is a no-op; pass one")
+    return {
+        "when_matched": when_matched,
+        "matched_condition": matched_condition,
+        "when_not_matched": when_not_matched,
+        "when_not_matched_by_source": bs,
+        "by_source_condition": by_source_condition,
+        "not_matched_condition": not_matched_condition,
+    }
 
 
 def merge(
@@ -3299,7 +3390,7 @@ def merge(
     The source is evaluated once per MERGE, as Delta's
     ``merge.materializeSource`` does: pruning and the write read one
     materialized copy (see :func:`_m_merge_plan`)."""
-    _validate_merge_clauses(
+    clauses = _merge_clauses(
         when_matched,
         matched_condition,
         when_not_matched,
@@ -3316,21 +3407,8 @@ def merge(
         return merge_upsert(
             spark, path, source, keys, match_condition=matched_condition
         )
-    clauses = {
-        "when_matched": when_matched,
-        "matched_condition": matched_condition,
-        "when_not_matched": when_not_matched,
-        "when_not_matched_by_source": when_not_matched_by_source,
-        "by_source_condition": by_source_condition,
-        "not_matched_condition": not_matched_condition,
-    }
-    base = latest_version(path)
-    merged, carry, pcols, dels = _m_merge_plan(
-        spark, path, base, source, keys, clauses=clauses
-    )
-    return _m_commit(
-        merged, path, base + 1, pcols, carry, base=base, deletes=dels,
-        op={"name": "MERGE", "dataChange": True},
+    return _m_run(
+        spark, path, _m_merge_plan, source, keys, False, None, clauses
     )
 
 
@@ -3373,11 +3451,16 @@ def merge_upsert(
     ``merge.materializeSource`` does: the prune pass and the
     write read one materialized copy (see :func:`_m_merge_plan`), so an
     expensive or nondeterministic source runs once.
+
+    The copy-on-write plan comes from manifest metadata only —
+    partition tuples select the touched entries, manifest min/max
+    stats and Bloom filters on the merge keys shrink them further to
+    the possibly-matching files — and carry-over is an entry copy into
+    the new manifest (no link, no data read, no rename).
     """
-    if evolve_schema and match_condition is not None:
-        raise ValueError("match_condition with evolve_schema is unsupported")
-    return _m_merge_upsert(
-        spark, path, updates, keys, evolve_schema, match_condition
+    return _m_run(
+        spark, path, _m_merge_plan, updates, keys, evolve_schema,
+        match_condition,
     )
 
 
@@ -3391,7 +3474,7 @@ def delete_where(spark: SparkSession, path: str, cond) -> int:
     ``cond`` references the partition column, Catalyst partition-prunes
     the touched-value scan itself, so a partition-aligned delete never
     reads the untouched data at all."""
-    return _m_delete_where(spark, path, cond)
+    return _m_run(spark, path, _m_rewrite_plan, cond)
 
 
 def append_table(spark: SparkSession, path: str, df: DataFrame) -> int:
@@ -3445,28 +3528,7 @@ def delete_predicate(spark: SparkSession, path: str, pred) -> int:
     at 100 TB. Sound fallback everywhere: leaves without usable stats
     keep their files. NULL-evaluating rows are KEPT (SQL DELETE
     semantics). Returns the new version."""
-    pred = _pred_resolve(pred)
-    cond = _pred_column(pred)
-    base = latest_version(path)
-    m = _m_load(path, base)
-    pcols = m.get("partition_by")
-    entries = _m_entries(path, m)
-    maybe = _pred_compile(pred, pcols, root=path)
-    carry = [e for e in entries if not maybe(e)]
-    rewrite = [e for e in entries if maybe(e)]
-    # every file refuted → a provable no-op on the data: commit the
-    # carried entries WITHOUT a write job (r15 opt — the empty-frame
-    # write was a full Spark job + task files for zero rows)
-    if not rewrite:
-        rew = None
-    else:
-        keep = ~F.coalesce(cond, F.lit(False))
-        rew = _m_apply_deletes(spark, path, rewrite, m).filter(keep)
-    return _m_commit(
-        rew, path, base + 1, pcols, carry, base=base,
-        deletes=m.get("deletes", []),
-        op={"name": "DELETE", "dataChange": True},
-    )
+    return _m_run(spark, path, _m_predicate_plan, pred)
 
 
 def _updated_frame(df: DataFrame, cond, assignments: dict) -> DataFrame:
@@ -3476,9 +3538,6 @@ def _updated_frame(df: DataFrame, cond, assignments: dict) -> DataFrame:
     not chained withColumn). NULL-evaluating predicates don't match."""
     from pyspark.sql import Column
 
-    unknown = [c for c in assignments if c not in df.columns]
-    if unknown:
-        raise ValueError(f"UPDATE of unknown column(s) {unknown}")
     hit = F.coalesce(cond, F.lit(False))
     repl = {
         c: F.when(hit, e if isinstance(e, Column) else F.lit(e)).otherwise(
@@ -3503,42 +3562,7 @@ def update_where(
     partition column; the updated rows simply land in their new
     partition's files while the sources rewrite.
     Returns the new version."""
-    base = latest_version(path)
-    rew, carry, pcols, dels = _m_update_plan(
-        spark, path, base, cond, assignments
-    )
-    return _m_commit(
-        rew, path, base + 1, pcols, carry, base=base, deletes=dels,
-        op={"name": "UPDATE", "dataChange": True},
-    )
-
-
-def _m_update_plan(
-    spark: SparkSession, path: str, base: int, cond, assignments: dict
-) -> tuple[DataFrame, list[dict], list[str] | None, list[dict]]:
-    """Plan a manifest UPDATE against an explicit base version (see
-    :func:`_m_merge_plan` for why plans take a base)."""
-    m = _m_load(path, base)
-    pcols = m.get("partition_by")
-    tgt = _m_read(spark, path, base)
-    hit = F.coalesce(cond, F.lit(False))
-    dels = m.get("deletes", [])
-    if pcols:
-        touched = {
-            tuple(r)
-            # metadata-sized collect: partitions containing matched rows
-            for r in tgt.filter(hit).select(*pcols).distinct().collect()
-        }
-        plan = _m_cow_entries(_m_entries(path, m), pcols, touched)
-        if plan is not None:
-            carry, touched_entries = plan
-            rew = _updated_frame(
-                _m_apply_deletes(spark, path, touched_entries, m),
-                cond,
-                assignments,
-            )
-            return rew, carry, pcols, dels
-    return _updated_frame(tgt, cond, assignments), [], pcols, dels
+    return _m_run(spark, path, _m_rewrite_plan, cond, assignments)
 
 
 def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame) -> int:
@@ -3561,40 +3585,22 @@ def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame) -> int:
     trade every merge-on-read format documents). NULL-keyed rows are
     never matched (SQL anti-join semantics).
     """
-    key_cols = list(keys_df.columns)
-    kd = keys_df.dropDuplicates()
-    base = latest_version(path)
+    return _m_run(spark, path, _m_keys_plan, keys_df)
+
+
+def _m_keys_plan(
+    spark: SparkSession, path: str, base: int, keys_df: DataFrame
+) -> _Plan:
+    """Plan an equality delete of ``keys_df``'s key tuples at version
+    ``base``: writes the key file and returns a carry-only plan whose
+    delete list gains it (full-table conflict footprint)."""
     m = _m_load(path, base)
-    uid = uuid.uuid4().hex
-    ddir = os.path.join(path, "data", uid)
-    kd.coalesce(1).write.parquet(ddir)
-    new_dels = []
-    for root, _dirs, files in os.walk(ddir):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            fp = os.path.join(root, fn)
-            new_dels.append(
-                {
-                    "path": os.path.relpath(fp, path).replace(os.sep, "/"),
-                    "keys": key_cols,
-                    "rows": _m_file_stats(fp)["rows"],
-                    "seq": base + 1,
-                }
-            )
-    deletes = m.get("deletes", []) + sorted(
-        new_dels, key=lambda d: d["path"]
+    ddir, recs = _m_write_sidecar(
+        keys_df.dropDuplicates(), path, base, keys=list(keys_df.columns)
     )
-    return _m_commit(
-        None,
-        path,
-        base + 1,
-        m.get("partition_by"),
-        _m_entries(path, m),
-        base=base,
-        schema_json=m["schema"],
-        deletes=deletes,
-        op={"name": "DELETE", "dataChange": True},
+    return _Plan(
+        None, _m_entries(path, m), m, {"name": "DELETE", "dataChange": True},
+        mode="*", deletes=m.get("deletes", []) + recs, sidecar=ddir,
     )
 
 
@@ -3621,108 +3627,27 @@ def delete_where_dv(spark: SparkSession, path: str, cond) -> int:
     pending; :func:`compact` materializes and clears them. DVs compose
     with equality deletes, column mapping, and hidden partitioning
     (the DV is column-agnostic). Returns the new version."""
-    base = latest_version(path)
-    m, entries, pos_deletes, ddir = _m_dv_plan(spark, path, base, cond)
-    try:
-        return _m_commit(
-            None,
-            path,
-            base + 1,
-            m.get("partition_by"),
-            entries,
-            base=base,
-            schema_json=m.get("schema"),
-            deletes=m.get("deletes", []),
-            pos_deletes=pos_deletes,
-            op={"name": "DELETE", "dataChange": True},
-        )
-    except ConcurrentWriteError:
-        shutil.rmtree(ddir, ignore_errors=True)
-        raise
+    return _m_run(spark, path, _m_dv_plan, cond)
 
 
-def _m_dv_plan(
-    spark: SparkSession, path: str, base: int, cond
-) -> tuple[dict, list[dict], list[dict], str]:
+def _m_dv_plan(spark: SparkSession, path: str, base: int, cond) -> _Plan:
     """Plan a positional MoR delete of rows matching ``cond`` at
-    version ``base`` — the shared engine behind
-    :func:`delete_where_dv` and the catalog transaction's staged DV
-    delete. Writes the DV sidecar and returns ``(manifest,
-    carry_entries, cumulative_pos_deletes, dv_datadir)``; the caller
-    commits (and removes ``dv_datadir`` on a lost race). New DV
-    records are stamped ``seq = base + 1`` — valid whatever slot the
-    commit lands on: it exceeds every carried entry's seq (all ≤
-    base) and no future commit stamps at or below it."""
+    version ``base``: writes the DV sidecar and returns a carry-only
+    plan whose DV list gains it (full-table conflict footprint)."""
     m = _m_load(path, base)
     entries = _m_entries(path, m)
     # positions must be found on the CURRENT snapshot (existing
     # equality deletes / DVs applied — re-marking an already-deleted
     # row would be harmless but wasteful)
-    live = _m_apply_deletes_pos(spark, path, entries, m)
+    live = _m_apply_deletes(spark, path, entries, m, with_pos=True)
     matches = live.filter(cond).select(
         F.col("__fname").alias("fname"), F.col("__pos").alias("pos")
     )
-    uid = uuid.uuid4().hex
-    ddir = os.path.join(path, "data", uid)
-    matches.coalesce(1).write.parquet(ddir)
-    new_pds = []
-    for root, _dirs, files in os.walk(ddir):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            fp = os.path.join(root, fn)
-            new_pds.append(
-                {
-                    "path": os.path.relpath(fp, path).replace(os.sep, "/"),
-                    "rows": _m_file_stats(fp)["rows"],
-                    "seq": base + 1,
-                }
-            )
-    pos_deletes = m.get("pos_deletes", []) + sorted(
-        new_pds, key=lambda d: d["path"]
+    ddir, recs = _m_write_sidecar(matches, path, base)
+    return _Plan(
+        None, entries, m, {"name": "DELETE", "dataChange": True},
+        mode="*", pos_deletes=m.get("pos_deletes", []) + recs, sidecar=ddir,
     )
-    return m, entries, pos_deletes, ddir
-
-
-def _m_apply_deletes_pos(
-    spark: SparkSession, path: str, entries: list[dict], m: dict
-) -> DataFrame:
-    """:func:`_m_apply_deletes` variant that KEEPS the ``__fname`` /
-    ``__pos`` row-identity columns — the input a positional-DV writer
-    needs. Same sequence rules."""
-    from pyspark.sql.types import StructType
-
-    if not entries:
-        schema = StructType.fromJson(m["schema"])
-        return (
-            spark.createDataFrame([], schema)
-            .withColumn("__fname", F.lit(None).cast("string"))
-            .withColumn("__pos", F.lit(None).cast("long"))
-        )
-    dels = m.get("deletes", [])
-    pdels = m.get("pos_deletes", [])
-    groups: dict[int, list[str]] = {}
-    for e in entries:
-        groups.setdefault(e.get("seq", 0), []).append(e["path"])
-    out = None
-    for s in sorted(groups):
-        df = _m_open_files(spark, path, groups[s], m["schema"], with_pos=True)
-        pd_here = [d for d in pdels if d["seq"] > s]
-        if pd_here:
-            dv = spark.read.schema(_DV_SCHEMA).parquet(
-                *[os.path.join(path, d["path"]) for d in pd_here]
-            ).select(
-                F.col("fname").alias("__fname"), F.col("pos").alias("__pos")
-            )
-            df = df.join(F.broadcast(dv), ["__fname", "__pos"], "left_anti")
-        for d in dels:
-            if d["seq"] > s:
-                kdf = spark.read.parquet(
-                    os.path.join(path, d["path"])
-                ).select(*d["keys"])
-                df = df.join(F.broadcast(kdf), d["keys"], "left_anti")
-        out = df if out is None else out.unionByName(df)
-    return out
 
 
 def delete_range(
@@ -3736,13 +3661,14 @@ def delete_range(
     keep filter. The explicit interval form exists because a general
     ``delete_where`` predicate can't be evaluated against min/max
     stats; range deletes (retention windows, backfill corrections) are
-    the shape that can. Falls back to :func:`delete_where`'s plan
-    whenever the stats are unusable.
+    the shape that can. A file whose stats are missing or do not
+    compare with the bounds is kept for the rewrite.
     Result is row-identical to ``delete_where(col BETWEEN lo AND hi)``
     (NULL ``col`` rows are kept, SQL DELETE semantics — a NULL never
     matches BETWEEN). Planning reads NO parquet footers at all — the
-    intervals come from the manifest entries."""
-    return _m_delete_range(spark, path, col, lo, hi)
+    intervals come from the manifest entries. It plans as a one-leaf
+    :func:`delete_predicate` (``("between", col, lo, hi)``)."""
+    return _m_run(spark, path, _m_predicate_plan, ("between", col, lo, hi))
 
 
 def compact(
@@ -3770,10 +3696,32 @@ def compact(
     rewritten into ~``target_file_bytes`` outputs; every other entry
     carries by manifest reference, untouched. O(small files), not
     O(table) — at 100 TB, compacting a table because 2 % of its files
-    are small must not cost a full rewrite. See :func:`_compact_small`.
+    are small must not cost a full rewrite. See :func:`_compact_small_plan`.
     (Z-order stays a deliberate full rewrite — global clustering can't
     carry anything — so combining the two knobs is rejected.)
     """
+    return _m_run(
+        spark, path, _m_compact_plan, target_files, zorder_code,
+        min_file_bytes, target_file_bytes,
+    )
+
+
+def _m_compact_plan(
+    spark: SparkSession,
+    path: str,
+    base: int,
+    target_files: int,
+    zorder_code,
+    min_file_bytes: int | None,
+    target_file_bytes: int,
+) -> _Plan | None:
+    """Plan a compaction at ``base`` (see :func:`compact`): the
+    selective bin-packing plan when ``min_file_bytes`` is set (None =
+    nothing to pack), else the full rewrite of the snapshot. A
+    partitioned table keeps its layout (``target_files`` becomes
+    files-per-partition rather than a global count); the rewrite
+    materializes equality deletes AND positional DVs, so it clears
+    both."""
     from spype_spark.layout import zorder_repartition
 
     if min_file_bytes is not None:
@@ -3783,26 +3731,20 @@ def compact(
                 "design); min_file_bytes selective compaction cannot "
                 "combine with it"
             )
-        return _compact_small(spark, path, min_file_bytes, target_file_bytes)
-    base = latest_version(path)
-    tgt = read_table(spark, path, version=base)
+        return _compact_small_plan(
+            spark, path, base, min_file_bytes, target_file_bytes
+        )
+    m = _m_load(path, base)
+    tgt = _m_apply_deletes(spark, path, _m_entries(path, m), m)
     if zorder_code is not None:
         out = zorder_repartition(tgt, zorder_code, target_files)
     else:
         out = tgt.repartition(target_files)
-    # a partitioned table keeps its layout (target_files becomes
-    # files-per-partition rather than a global count)
-    m = _m_load(path, base)
-    # the rewrite materializes equality deletes AND positional DVs
-    # (read_table applied them) — clear both
-    return _m_commit(
-        out, path, base + 1, m.get("partition_by"), [], base=base,
-        pos_deletes=[],
-        op={
-            "name": "ZORDER" if zorder_code is not None else "COMPACT",
-            "dataChange": False,
-        },
-    )
+    op = {
+        "name": "ZORDER" if zorder_code is not None else "COMPACT",
+        "dataChange": False,
+    }
+    return _Plan(out, [], m, op, mode="*", deletes=[], pos_deletes=[])
 
 
 def _compact_small_plan(
@@ -3811,12 +3753,26 @@ def _compact_small_plan(
     base: int,
     min_file_bytes: int,
     target_file_bytes: int,
-) -> tuple[dict, list[dict], DataFrame | None]:
-    """Selective-compaction planning against an explicit ``base`` —
-    shared by :func:`_compact_small` and the catalog transaction's
-    staged OPTIMIZE. Returns ``(manifest, carry_entries, packed_df)``;
-    ``packed_df`` is None when fewer than two files fall under the
-    threshold (the no-op case)."""
+) -> _Plan | None:
+    """Selective small-file compaction — the OPTIMIZE bin-packing
+    kernel, planned against an explicit ``base``. Planning is manifest
+    arithmetic: partition the entry list by recorded file size
+    (entries written before the ``bytes`` key existed fall back to one
+    ``stat()`` each — driver-side metadata, never data); files at or
+    above the threshold CARRY by reference with their manifest entries
+    byte-identical. The small files are read with the snapshot's
+    pending equality deletes and DVs applied (rewritten rows
+    materialize them; the new files' seq outranks every older delete,
+    so nothing re-applies) and bin-packed to ``ceil(small_bytes /
+    target_file_bytes)`` outputs — partitioned tables pack WITHIN
+    partitions (hash-repartition on the partition columns), so the
+    layout is preserved and each partition's shards merge. Delete
+    files stay in the manifest: carried entries still need them.
+    Fewer than two small files is a metadata no-op: None, and the
+    caller commits nothing.
+
+    Scale note: cost is O(bytes-under-threshold) + one manifest
+    publish. The carried set is never opened, listed, or hashed."""
     import math
 
     m = _m_load(path, base)
@@ -3841,53 +3797,13 @@ def _compact_small_plan(
         else:
             carry.append(e)
     if len(small) < 2:
-        return m, entries, None
+        return None
     nfiles = max(1, math.ceil(small_bytes / target_file_bytes))
     rew = _m_apply_deletes(spark, path, small, m)
     pcols = m.get("partition_by")
     out = rew.repartition(nfiles, *pcols) if pcols else rew.repartition(nfiles)
-    return m, carry, out
-
-
-def _compact_small(
-    spark: SparkSession,
-    path: str,
-    min_file_bytes: int,
-    target_file_bytes: int,
-) -> int:
-    """Selective small-file compaction — the OPTIMIZE bin-packing
-    kernel. Planning is manifest arithmetic: partition the entry list
-    by recorded file size (entries written before the ``bytes`` key
-    existed fall back to one ``stat()`` each — driver-side metadata,
-    never data); files at or above the threshold CARRY by reference
-    with their manifest entries byte-identical. The small files are
-    read with the snapshot's pending equality deletes and DVs applied
-    (rewritten rows materialize them; the new files' seq outranks
-    every older delete, so nothing re-applies) and bin-packed to
-    ``ceil(small_bytes / target_file_bytes)`` outputs — partitioned
-    tables pack WITHIN partitions (hash-repartition on the partition
-    columns), so the layout is preserved and each partition's shards
-    merge. Delete files stay in the manifest: carried entries still
-    need them. Fewer than two small files is a metadata no-op that
-    returns the current version without committing.
-
-    Scale note: cost is O(bytes-under-threshold) + one manifest
-    publish. The carried set is never opened, listed, or hashed."""
-    base = latest_version(path)
-    m, carry, out = _compact_small_plan(
-        spark, path, base, min_file_bytes, target_file_bytes
-    )
-    if out is None:
-        return base  # nothing to pack — no-op, no commit
-    return _m_commit(
-        out,
-        path,
-        base + 1,
-        m.get("partition_by"),
-        carry,
-        base=base,
-        deletes=m.get("deletes", []),
-        op={"name": "OPTIMIZE", "dataChange": False},
+    return _Plan(
+        out, carry, m, {"name": "OPTIMIZE", "dataChange": False}, mode="*"
     )
 
 
