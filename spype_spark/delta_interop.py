@@ -59,6 +59,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from spype_spark import row_deletes
+from spype_spark.manifest_log import m_file_key
+
 __all__ = [
     "read_delta",
     "delta_history",
@@ -72,8 +75,6 @@ __all__ = [
 ]
 
 from spype_spark.delta_log import (  # noqa: F401  (historical aliases)
-    LOG_DIR as _LOG_DIR,
-    SUPPORTED_READER_FEATURES as _SUPPORTED_READER_FEATURES,
     URI_RE as _URI_RE,
     check_protocol as _check_protocol,
     checkpoint_path as _checkpoint_path,
@@ -83,7 +84,6 @@ from spype_spark.delta_log import (  # noqa: F401  (historical aliases)
     load_dv_bytes as _load_dv_bytes,
     log_dir as _log_dir,
     mapping_info as _mapping_info,
-    physical_json as _physical_json,
     resolve_checkpoint as _resolve_checkpoint,
     z85_decode as _z85_decode,
     z85_encode as _z85_encode,
@@ -689,68 +689,52 @@ def _dv_positions_df(
     # decode code to executors that cannot import spype_spark
     from spype_spark.roaring import deserialize_array64
 
+    def decode(fp, blob, card):
+        """The positions of one deletion vector, checked against its
+        declared cardinality (-1: none declared)."""
+        pos = deserialize_array64(bytes(blob))
+        if card >= 0 and len(pos) != card:
+            raise ValueError(
+                f"deletion vector for {fp} decodes to {len(pos)} "
+                f"positions != cardinality {card}"
+            )
+        return pos
+
     # NOTE: cardinality 0 is legal (an empty vector) and must not be
     # conflated with "missing" — `or -1` would force such batches onto
     # the executor path and skip their consistency check
-    cards = [
-        int(dvd["cardinality"]) if dvd.get("cardinality") is not None else -1
-        for _fp, dvd in dv_adds
+    triples = [
+        (
+            fp,
+            bytearray(_load_dv_bytes(table_path, dvd)),
+            int(dvd["cardinality"])
+            if dvd.get("cardinality") is not None
+            else -1,
+        )
+        for fp, dvd in dv_adds
     ]
+    out_schema = "__del_file string, __del_pos long"
+    cards = [c for _fp, _b, c in triples]
     if all(c >= 0 for c in cards) and sum(cards) <= _DV_DRIVER_DECODE_THRESHOLD:
         import numpy as np
 
-        files: list[str] = []
-        counts: list[int] = []
-        arrs = []
-        for (fp, dvd), card in zip(dv_adds, cards):
-            pos = deserialize_array64(_load_dv_bytes(table_path, dvd))
-            if len(pos) != card:
-                raise ValueError(
-                    f"deletion vector for {fp} decodes to {len(pos)} "
-                    f"positions != cardinality {card}"
-                )
-            files.append(fp)
-            counts.append(len(pos))
-            arrs.append(np.asarray(pos, dtype=np.int64))
+        arrs = [np.asarray(decode(*t), dtype=np.int64) for t in triples]
+        files = np.repeat([t[0] for t in triples], [len(a) for a in arrs])
         # hand the positions over as ONE Arrow-backed pandas frame: the
         # per-tuple pickle of createDataFrame(list) costs ~10× more
         # than the decode itself at the threshold cardinality (r15 opt)
         pdf = pd.DataFrame(
-            {
-                "__del_file": np.repeat(
-                    np.asarray(files, dtype=object), counts
-                ),
-                "__del_pos": (
-                    np.concatenate(arrs)
-                    if arrs
-                    else np.empty(0, dtype=np.int64)
-                ),
-            }
+            {"__del_file": files.astype(object), "__del_pos": np.concatenate(arrs)}
         )
-        return spark.createDataFrame(
-            pdf, "__del_file string, __del_pos long"
-        )
-    rows = [
-        (fp, bytearray(_load_dv_bytes(table_path, dvd)),
-         int(dvd["cardinality"]) if dvd.get("cardinality") is not None
-         else -1)
-        for fp, dvd in dv_adds
-    ]
+        return spark.createDataFrame(pdf, out_schema)
     src = spark.createDataFrame(
-        rows, "__del_file string, __dv binary, __card long"
+        triples, "__del_file string, __dv binary, __card long"
     )
 
-    def explode_dv(batches):
-        for pdf in batches:
-            for fp, blob, card in zip(
-                pdf["__del_file"], pdf["__dv"], pdf["__card"]
-            ):
-                pos = deserialize_array64(bytes(blob))
-                if card >= 0 and len(pos) != card:
-                    raise ValueError(
-                        f"deletion vector for {fp} decodes to {len(pos)} "
-                        f"positions != cardinality {card}"
-                    )
+    def explode(batches):
+        for b in batches:
+            for fp, blob, card in zip(b["__del_file"], b["__dv"], b["__card"]):
+                pos = decode(fp, blob, card)
                 yield pd.DataFrame(
                     {
                         "__del_file": [fp] * len(pos),
@@ -758,7 +742,7 @@ def _dv_positions_df(
                     }
                 )
 
-    return src.mapInPandas(explode_dv, "__del_file string, __del_pos long")
+    return src.mapInPandas(explode, out_schema)
 
 
 def _scan_adds(
@@ -776,33 +760,29 @@ def _scan_adds(
     name/shape (struct casts rename nested fields positionally) —
     partitionValues keys and directory names are physical per spec.
     Adds carrying a ``deletionVector`` have their tombstoned rows
-    removed by ONE distributed anti-join keyed on the scan's own
-    ``_metadata`` (file, row position) — bitmaps decode on executors,
-    never in a driver loop. ``keep_pos`` appends ``_file``/``_pos``
-    metadata columns (what a DV writer filters to compute deletes)."""
+    removed by the shared delete kernel (:func:`row_deletes.live_rows`):
+    ONE distributed anti-join keyed on the scan's own ``_metadata``
+    (file, row position), whatever the scan shape. Delta has no
+    sequence numbers, so only the positional input is used; the
+    bitmaps decode in :func:`_dv_positions_df`. ``keep_pos`` appends
+    ``_file``/``_pos`` metadata columns (what a DV writer filters to
+    compute deletes)."""
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
     mode, pj, l2p = _mapping_info(meta)
     read_schema = StructType.fromJson(pj) if mode == "name" else schema
     if not adds:
-        out = spark.createDataFrame([], schema)
-        if keep_pos:
-            out = out.select(
-                "*",
-                F.lit(None).cast("string").alias("_file"),
-                F.lit(None).cast("long").alias("_pos"),
-            )
-        return out
-    dv_adds = [
-        (
-            os.path.abspath(
-                os.path.join(path, urllib.parse.unquote(a["path"]))
-            ),
-            a["deletionVector"],
+        return row_deletes.empty_scan(
+            spark, schema, *(("_file", "_pos") if keep_pos else ())
         )
-        for a in adds
+    rel_paths = [urllib.parse.unquote(a["path"]) for a in adds]
+    abs_paths = [os.path.join(path, p) for p in rel_paths]
+    dv_adds = [
+        (os.path.abspath(ap), a["deletionVector"])
+        for a, ap in zip(adds, abs_paths)
         if a.get("deletionVector")
     ]
     need_pos = keep_pos or bool(dv_adds)
+    pos_cols = ["__dv_file", "__dv_pos"] if need_pos else []
 
     def attach_pos(df: DataFrame) -> DataFrame:
         if not need_pos:
@@ -816,20 +796,16 @@ def _scan_adds(
 
     def finish(df: DataFrame) -> DataFrame:
         if dv_adds:
-            dels = _dv_positions_df(spark, path, dv_adds)
-            cond = (df["__dv_file"] == dels["__del_file"]) & (
-                df["__dv_pos"] == dels["__del_pos"]
-            )
-            df = df.join(dels, cond, "left_anti")
-        if mode == "name":
-            sel = [
-                F.col(pf.name).cast(lf.dataType).alias(lf.name)
-                for lf, pf in zip(schema.fields, read_schema.fields)
-            ]
-        elif need_pos:
-            sel = [F.col(f.name) for f in read_schema.fields]
-        else:
+            pos = _dv_positions_df(spark, path, dv_adds)
+            df = row_deletes.live_rows(df, "__dv_file", "__dv_pos", pos)
+        if not need_pos and mode != "name":
             return df
+        sel = [
+            F.col(pf.name).cast(lf.dataType).alias(lf.name)
+            if mode == "name"
+            else F.col(pf.name)
+            for lf, pf in zip(schema.fields, read_schema.fields)
+        ]
         if keep_pos:
             sel += [
                 F.col("__dv_file").alias("_file"),
@@ -875,9 +851,6 @@ def _scan_adds(
         data_trip = [
             (ln, i, pn) for ln, i, pn in trip if ln not in pcols_log
         ]
-        abs_paths = [
-            os.path.join(path, urllib.parse.unquote(a["path"])) for a in adds
-        ]
         groups: dict[tuple, list[str]] = {}
         for a, ap in zip(adds, abs_paths):
             fid2name = _parquet_field_ids(ap)
@@ -895,7 +868,6 @@ def _scan_adds(
                 pv.get(l2p_trip.get(c, c), pv.get(c)) for c in pcols_log
             )
             groups.setdefault((proj, pvt), []).append(ap)
-        order = [f.name for f in schema.fields]
         df = None
         for (proj, pvt), fps in sorted(
             groups.items(), key=lambda kv: str(kv[0])
@@ -903,42 +875,19 @@ def _scan_adds(
             rs = StructType(
                 [StructField(fc, schema[ln].dataType, True) for ln, fc in proj]
             )
-            sel = [F.col(fc).alias(ln) for ln, fc in proj]
-            if need_pos:
-                sel += [
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), _URI_RE, ""
-                    ).alias("__dv_file"),
-                    F.col("_metadata.row_index").alias("__dv_pos"),
-                ]
-            part = spark.read.schema(rs).parquet(*fps).select(*sel)
-            for c, val in zip(pcols_log, pvt):
-                typ = schema[c].dataType
-                part = part.withColumn(
-                    c,
-                    F.lit(val).cast(typ)
-                    if val is not None
-                    and val != "__HIVE_DEFAULT_PARTITION__"
-                    else F.lit(None).cast(typ),
-                )
-            keep = order + (
-                ["__dv_file", "__dv_pos"] if need_pos else []
+            lits = {
+                c: F.lit(None if v == "__HIVE_DEFAULT_PARTITION__" else v)
+                .cast(schema[c].dataType)
+                for c, v in zip(pcols_log, pvt)
+            }
+            part = (
+                attach_pos(spark.read.schema(rs).parquet(*fps))
+                .select(*[F.col(fc).alias(ln) for ln, fc in proj], *pos_cols)
+                .withColumns(lits)
+                .select(*schema.fieldNames(), *pos_cols)
             )
-            part = part.select(*keep)
             df = part if df is None else df.unionByName(part)
-        if dv_adds:
-            dels = _dv_positions_df(spark, path, dv_adds)
-            cond = (df["__dv_file"] == dels["__del_file"]) & (
-                df["__dv_pos"] == dels["__del_pos"]
-            )
-            df = df.join(dels, cond, "left_anti")
-        sel = [F.col(f.name) for f in schema.fields]
-        if keep_pos:
-            sel += [
-                F.col("__dv_file").alias("_file"),
-                F.col("__dv_pos").alias("_pos"),
-            ]
-        return df.select(*sel)
+        return finish(df)
 
     # partitionColumns are logical names; under mapping the log's
     # partitionValues / directory layout use the physical names
@@ -958,8 +907,6 @@ def _scan_adds(
             out[pc] = pv[pc] if pc in pv else pv.get(lc)
         return out
 
-    rel_paths = [urllib.parse.unquote(a["path"]) for a in adds]
-    abs_paths = [os.path.join(path, p) for p in rel_paths]
     if not pcols:
         return finish(
             attach_pos(spark.read.schema(read_schema).parquet(*abs_paths))
@@ -967,10 +914,8 @@ def _scan_adds(
     # partitioned: partitionValues are authoritative. One scan with
     # Hive-style discovery when the layout matches them exactly …
     hive_ok = all(
-        urllib.parse.unquote(a["path"]).startswith(
-            _hive_prefix(pcols, pv_of(a))
-        )
-        for a in adds
+        rp.startswith(_hive_prefix(pcols, pv_of(a)))
+        for a, rp in zip(adds, rel_paths)
     )
     if hive_ok:
         return finish(
@@ -993,18 +938,17 @@ def _scan_adds(
         key = tuple(pv.get(c) for c in pcols)
         by_group.setdefault(key, []).append(ap)
     out = None
-    keep_cols = [f.name for f in read_schema.fields] + (
-        ["__dv_file", "__dv_pos"] if need_pos else []
-    )
     for key, files in sorted(by_group.items(), key=lambda kv: str(kv[0])):
-        part = attach_pos(spark.read.schema(data_schema).parquet(*files))
-        for c, val in zip(pcols, key):
-            typ = read_schema[c].dataType
-            part = part.withColumn(
-                c,
-                F.lit(val).cast(typ) if val is not None else F.lit(None).cast(typ),
+        part = (
+            attach_pos(spark.read.schema(data_schema).parquet(*files))
+            .withColumns(
+                {
+                    c: F.lit(val).cast(read_schema[c].dataType)
+                    for c, val in zip(pcols, key)
+                }
             )
-        part = part.select(*keep_cols)
+            .select(*read_schema.fieldNames(), *pos_cols)
+        )
         out = part if out is None else out.unionByName(part)
     return finish(out)
 
@@ -1119,74 +1063,26 @@ def _narrow_file_cols(schema_fields: list[dict], file_path: str) -> list[str]:
 def _mor_deleted_positions(
     spark: SparkSession, table_path: str, m: dict, entries: list[dict]
 ) -> dict[str, list[int]]:
-    """``{commit-relative fname: sorted row positions}`` suppressed by
-    the manifest's pending merge-on-read deletes, honoring the
-    SEQUENCE rule (a delete only touches entries from OLDER commits) —
-    the exact per-file row sets a Delta deletion vector must encode.
-
-    Equality deletes semi-join the position-aware scan per sequence
-    group (the mirror image of ``lakehouse._m_apply_deletes``'s
-    anti-join); positional sidecars already carry (fname, pos) and
-    only need the per-file sequence filter. The result is collected
-    driver-side: bounded by the pending deletes' own matched-row count
-    — the quantity the export commit must serialize into vectors
-    either way (same bound and argument as ``delta_delete_rows``)."""
+    """``{file key: sorted row positions}`` suppressed by the manifest's
+    pending merge-on-read deletes — the exact per-file row sets a Delta
+    deletion vector must encode. The rows come from the delete kernel's
+    semi-join form over the same inputs a native read anti-joins
+    (``lakehouse._m_delete_inputs``), so the sequence rule lives in one
+    place. The result is collected driver-side: bounded by the pending
+    deletes' own matched-row count — the quantity the export commit
+    must serialize into vectors either way (same bound and argument as
+    ``delta_delete_rows``)."""
     from spype_spark import lakehouse as lake
 
-    dels = m.get("deletes", [])
-    pdels = m.get("pos_deletes", [])
-    parts: list[DataFrame] = []
-    groups: dict[int, list[str]] = {}
-    for e in entries:
-        groups.setdefault(int(e.get("seq", 0)), []).append(e["path"])
-    for s, paths in sorted(groups.items()):
-        eq_here = [d for d in dels if d["seq"] > s]
-        if not eq_here:
-            continue
-        df = lake._m_open_files(
-            spark, table_path, paths, m["schema"], with_pos=True
-        )
-        for d in eq_here:
-            kdf = spark.read.parquet(
-                os.path.join(table_path, d["path"])
-            ).select(*d["keys"])
-            parts.append(
-                df.join(F.broadcast(kdf), d["keys"], "left_semi").select(
-                    F.col("__fname").alias("fname"),
-                    F.col("__pos").alias("pos"),
-                )
-            )
-    if pdels:
-        fseq = spark.createDataFrame(
-            [
-                (e["path"].split("data/", 1)[-1], int(e.get("seq", 0)))
-                for e in entries
-            ],
-            "fname string, fseq long",
-        )
-        pv: DataFrame | None = None
-        for d in pdels:
-            one = (
-                spark.read.parquet(os.path.join(table_path, d["path"]))
-                .select("fname", "pos")
-                .withColumn("dseq", F.lit(int(d["seq"])))
-            )
-            pv = one if pv is None else pv.unionByName(one)
-        parts.append(
-            pv.join(F.broadcast(fseq), "fname")
-            .filter(F.col("dseq") > F.col("fseq"))
-            .select("fname", "pos")
-        )
+    inputs = lake._m_delete_inputs(spark, table_path, entries, m)
     out: dict[str, list[int]] = {}
-    if not parts:
+    if inputs is None:
         return out
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
+    dead = row_deletes.deleted_rows(*inputs).select("__fname", "__pos")
     # metadata-sized collect: bounded by the pending deletes' matched
     # row count — the exact payload the commit serializes into DVs
-    for r in allp.dropDuplicates(["fname", "pos"]).collect():
-        out.setdefault(r["fname"], []).append(int(r["pos"]))
+    for r in dead.dropDuplicates().collect():
+        out.setdefault(r["__fname"], []).append(int(r["__pos"]))
     return {k: sorted(v) for k, v in out.items()}
 
 
@@ -1242,9 +1138,10 @@ def export_delta(
     protocol declares reader feature ``deletionVectors``. Readers
     without DV support then fail LOUDLY on the protocol gate (the
     spec's behavior), never resurrect deleted rows. The conversion is
-    O(pending deleted rows): eq-delete keys semi-join the table scan
-    per sequence group, positional sidecars remap directly — both are
-    the quantity the commit must serialize anyway.
+    O(pending deleted rows): the delete kernel's semi-join form
+    (:func:`row_deletes.deleted_rows`) returns the (file, position)
+    rows the pending deletes remove from one table scan — the quantity
+    the commit must serialize anyway.
 
     Column-mapping renames likewise export as ``columnMapping`` NAME
     mode (graduated): each logical field carries
@@ -1342,8 +1239,7 @@ def export_delta(
             "dataChange": True,
         }
         if dv_positions:
-            fname = e["path"].split("data/", 1)[-1]
-            pos = dv_positions.pop(fname, None)
+            pos = dv_positions.pop(m_file_key(ap), None)
             if pos:
                 from spype_spark import roaring
 

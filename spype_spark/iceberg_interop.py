@@ -47,6 +47,7 @@ read is one Spark scan, so pruning/pushdown apply unchanged.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -57,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from spype_spark import row_deletes
 from spype_spark.avro_io import read_avro, write_avro
 
 __all__ = [
@@ -74,7 +76,6 @@ __all__ = [
 ]
 
 from spype_spark.iceberg_log import (  # noqa: F401  (historical aliases)
-    ICE_TO_SPARK as _ICE_TO_SPARK,
     URI_SCHEME_RE as _URI_SCHEME_RE,
     current_fields as _current_fields,
     current_metadata as _current_metadata,
@@ -84,7 +85,6 @@ from spype_spark.iceberg_log import (  # noqa: F401  (historical aliases)
     parquet_field_ids as _parquet_field_ids,
     parquet_footer_info as _parquet_footer_info,
     pick_snapshot as _pick_snapshot,
-    pv_match as _pv_match,
     resolve_file as _resolve_file,
     snapshot_files as _snapshot_files,
 )
@@ -165,14 +165,16 @@ def _read_with_deletes(
 ) -> DataFrame:
     """Shared core of :func:`read_iceberg` / :func:`position_scan`:
     one declarative parquet scan over the live data files, then v2
-    merge-on-read deletes applied as DISTRIBUTED anti-joins keyed by
-    the scan's own ``_metadata`` columns — no row ever visits the
-    driver. Sequence-number semantics per spec: an equality delete
+    merge-on-read deletes decoded into the inputs of the shared delete
+    kernel (:func:`row_deletes.live_rows`), which anti-joins them
+    against the scan's own ``_metadata`` columns — no row ever visits
+    the driver. Sequence-number semantics per spec: an equality delete
     hides rows of data files with STRICTLY SMALLER data sequence
     numbers (rows appended after the delete survive, even when they
-    match); a position delete applies to data files with seq ≤ its
-    own. ``keep_meta`` keeps Iceberg's ``_file``/``_pos`` metadata
-    columns in the result. ``file_subset`` restricts the scan to the
+    match), so its reach is its seq − 1; a position delete applies to
+    data files with seq ≤ its own, tested on the delete side.
+    ``keep_meta`` keeps Iceberg's ``_file``/``_pos`` metadata columns
+    in the result. ``file_subset`` restricts the scan to the
     named data files BEFORE listing (scheme-insensitive) — the
     targeted-read path incremental consumers use; delete files are
     never subset (an anti-join against absent rows is a no-op)."""
@@ -195,14 +197,9 @@ def _read_with_deletes(
         ]
     data_cols = [f.name for f in schema.fields]
     if not info["data"]:
-        df = spark.createDataFrame([], schema)
-        if keep_meta:
-            df = df.select(
-                "*",
-                F.lit(None).cast("string").alias("_file"),
-                F.lit(None).cast("long").alias("_pos"),
-            )
-        return df
+        return row_deletes.empty_scan(
+            spark, schema, *(("_file", "_pos") if keep_meta else ())
+        )
     missing = [fp for fp, _s in info["data"] if not os.path.exists(fp)]
     if missing:
         raise FileNotFoundError(
@@ -244,66 +241,62 @@ def _read_with_deletes(
         df = part if df is None else df.unionByName(part)
     if not need_meta:
         return df
-    if info["pos"] or info["eq"]:
-        # file -> data sequence number: metadata-sized (one row per
-        # live file, the same list the scan plan enumerates), joined
-        # broadcast so every data row carries its seq JVM-side.
-        seqdf = spark.createDataFrame(
-            [(os.path.abspath(fp), int(s)) for fp, s in info["data"]],
-            "__ice_file string, __ice_seq long",
-        )
-        df = df.join(F.broadcast(seqdf), "__ice_file", "left")
-        id2name = {int(f["id"]): f["name"] for f in _current_fields(meta)}
-        # equality deletes, grouped by (seq, id-set): one anti-join per
-        # group (delete-file count is a metadata quantity)
-        eq_groups: dict[tuple, list[str]] = {}
-        for fp, dseq, ids in info["eq"]:
-            eq_groups.setdefault((int(dseq), tuple(sorted(ids))), []).append(fp)
-        for (dseq, ids), files in sorted(eq_groups.items()):
-            try:
-                cols = [id2name[i] for i in ids]
-            except KeyError as exc:
-                raise ValueError(
-                    f"equality_ids {list(ids)} name a field id missing "
-                    f"from the current schema"
-                ) from exc
-            # delete files written before a rename carry the OLD
-            # column names — resolve by field id per file, same as
-            # the data scan
-            dels = None
-            for fpath in files:
-                id2phys = _parquet_field_ids(fpath)
-                d = spark.read.parquet(fpath).select(
-                    *[
-                        F.col(id2phys.get(i, id2name[i])).alias(id2name[i])
-                        for i in ids
-                    ]
-                )
-                dels = d if dels is None else dels.unionByName(d)
-            cond = df["__ice_seq"] < F.lit(dseq)
-            for c in cols:
-                cond = cond & df[c].eqNullSafe(dels[c])
-            df = df.join(dels, cond, "left_anti")
-        if info["pos"]:
-            by_seq: dict[int, list[str]] = {}
-            for fp, dseq in info["pos"]:
-                by_seq.setdefault(int(dseq), []).append(fp)
-            pos = None
-            for dseq, files in sorted(by_seq.items()):
-                p = spark.read.parquet(*files).select(
-                    F.regexp_replace(
-                        F.col("file_path"), _URI_SCHEME_RE, ""
-                    ).alias("__del_file"),
-                    F.col("pos").cast("long").alias("__del_pos"),
-                    F.lit(dseq).alias("__del_seq"),
-                )
-                pos = p if pos is None else pos.unionByName(p)
-            cond = (
-                (df["__ice_file"] == pos["__del_file"])
-                & (df["__ice_pos"] == pos["__del_pos"])
-                & (df["__ice_seq"] <= pos["__del_seq"])
+    # file -> data sequence number: metadata-sized (one row per live
+    # file, the same list the scan plan enumerates)
+    seqs = [(os.path.abspath(fp), int(s)) for fp, s in info["data"]]
+    id2name = {int(f["id"]): f["name"] for f in _current_fields(meta)}
+    # equality deletes, grouped by (seq, id-set): one anti-join per
+    # group (delete-file count is a metadata quantity); they reach
+    # data files with a STRICTLY smaller seq
+    eq_groups: dict[tuple, list[str]] = {}
+    for fp, dseq, ids in info["eq"]:
+        eq_groups.setdefault((int(dseq), tuple(sorted(ids))), []).append(fp)
+    eq = []
+    for (dseq, ids), files in sorted(eq_groups.items()):
+        if not set(ids) <= id2name.keys():
+            raise ValueError(
+                f"equality_ids {list(ids)} name a field id missing "
+                f"from the current schema"
             )
-            df = df.join(pos, cond, "left_anti")
+        cols = [id2name[i] for i in ids]
+        # delete files written before a rename carry the OLD column
+        # names — resolve by field id per file, same as the data scan
+        frames = []
+        for fpath in files:
+            id2phys = _parquet_field_ids(fpath)
+            frames.append(
+                spark.read.parquet(fpath).select(
+                    *[F.col(id2phys.get(i, id2name[i])) for i in ids]
+                ).toDF(*cols)
+            )
+        eq.append(
+            (cols, functools.reduce(DataFrame.unionByName, frames), dseq - 1)
+        )
+    pos = None
+    if info["pos"]:
+        # a position delete reaches data files with seq <= its own:
+        # filter its rows against the seq map on the delete side
+        by_seq: dict[int, list[str]] = {}
+        for fp, dseq in info["pos"]:
+            by_seq.setdefault(int(dseq), []).append(fp)
+        for dseq, files in sorted(by_seq.items()):
+            p = spark.read.parquet(*files).select(
+                F.regexp_replace(
+                    F.col("file_path"), _URI_SCHEME_RE, ""
+                ).alias("__del_file"),
+                F.col("pos").cast("long").alias("__del_pos"),
+                F.lit(dseq).alias("__del_seq"),
+            )
+            pos = p if pos is None else pos.unionByName(p)
+        smap = spark.createDataFrame(
+            seqs, "__del_file string, __file_seq long"
+        )
+        pos = (
+            pos.join(F.broadcast(smap), "__del_file")
+            .filter(F.col("__file_seq") <= F.col("__del_seq"))
+            .select("__del_file", "__del_pos")
+        )
+    df = row_deletes.live_rows(df, "__ice_file", "__ice_pos", pos, eq, seqs)
     if keep_meta:
         return df.select(
             *data_cols,
@@ -325,8 +318,11 @@ def read_iceberg(
     table's current schema (absent columns NULL per Iceberg's
     schema-evolution rule; identity-partition columns come from the
     files themselves, the Iceberg storage model). v2 merge-on-read
-    position/equality deletes are applied as distributed anti-joins
-    (see :func:`_read_with_deletes` for the sequence-number rules).
+    position/equality deletes are applied by the shared delete kernel
+    (:mod:`spype_spark.row_deletes`) as distributed anti-joins over the
+    one scan (see :func:`_read_with_deletes` for the sequence-number
+    rules). Equality deletes match null-safely: a NULL delete key
+    removes NULL-keyed rows, per the spec.
 
     ``partition_filter`` ({col: value or list}) prunes manifest
     entries by their typed partition record before any data file is

@@ -684,19 +684,6 @@ def _resolve_eq_keys(path: str, recs: list[dict], rename: dict) -> None:
             )
 
 
-def _rel_fname(abs_path: str) -> str:
-    """Commit-relative file name — the row-identity key positional
-    DVs anchor to. MUST reproduce the engine's own convention
-    (``regexp_extract(file_path, '/data/(.*)$', 1)`` in
-    ``lakehouse._m_open_files``): everything after the FIRST
-    ``/data/`` of the file's absolute path, so a table whose ROOT
-    itself contains a ``/data/`` segment still matches its recorded
-    DV fnames (review r14)."""
-    if "/data/" in abs_path:
-        return abs_path.split("/data/", 1)[1]
-    return abs_path
-
-
 class _LakeCDFPartition(InputPartition):
     """One unit of change-feed work. ``kind``:
 
@@ -968,7 +955,7 @@ def _plan_cdf_step(
         old_side = [
             (
                 abs_of(e),
-                _rel_fname(abs_of(e)),
+                mlog.m_file_key(abs_of(e)),
                 mlog.m_applicable(prev_recs, e),
             )
             for e in removed + affected
@@ -976,7 +963,7 @@ def _plan_cdf_step(
         new_side = [
             (
                 abs_of(e),
-                _rel_fname(abs_of(e)),
+                mlog.m_file_key(abs_of(e)),
                 mlog.m_applicable(cur_recs, e),
             )
             for e in added + affected
@@ -1077,7 +1064,7 @@ def _plan_cdf_step(
                 v,
                 rename,
                 file=abs_of(e),
-                rel=_rel_fname(abs_of(e)),
+                rel=mlog.m_file_key(abs_of(e)),
                 base_recs=mlog.m_applicable(cur_recs, e),
             )
         )
@@ -1095,7 +1082,7 @@ def _plan_cdf_step(
                 v,
                 rename,
                 file=abs_of(e),
-                rel=_rel_fname(abs_of(e)),
+                rel=mlog.m_file_key(abs_of(e)),
                 base_recs=base,
                 new_recs=new,
             )

@@ -60,8 +60,10 @@ from spype_spark.manifest_log import (
     _PHYS_KEY,
     ConcurrentWriteError,
     col_map as _col_map,
+    FILE_KEY_RE as _FILE_KEY_RE,
     m_delete_recs as _m_delete_recs,
     m_entries as _m_entries,
+    m_file_key as _m_file_key,
     m_file_stats as _m_file_stats,
     m_load as _m_load,
     m_path as _m_path,
@@ -74,6 +76,7 @@ from spype_spark.bloom import (
     bloom_all_miss as _bloom_all_miss,
     bloom_build as _bloom_build,
 )
+from spype_spark import row_deletes
 from spype_spark.planning import lazy_checkpoint
 
 # Retention grace window for the path-refcount GC (see _m_gc_files):
@@ -890,14 +893,13 @@ def _m_open_files(
     predating a drop+re-add whose fresh physical name they lack) read
     it as NULL — exactly Delta/Iceberg schema-on-read.
 
-    ``with_pos=True`` appends ``__fname`` (the file's COMMIT-RELATIVE
-    path — everything after ``/data/``, i.e. ``<commit-uuid>/<partition
-    dirs>/<part file>``: unique by the commit uuid even though
-    ``partitionBy`` reuses part-file basenames across partition dirs,
-    and invariant under table moves, clones, and branches because it
-    never names the table root) and ``__pos`` (the row's index WITHIN
-    its file, Spark's ``_metadata.row_index``) — the row identity
-    positional deletion vectors anchor to."""
+    ``with_pos=True`` appends ``__fname`` (the file key of
+    :func:`manifest_log.m_file_key`: the COMMIT-RELATIVE path
+    ``<commit-uuid>/<partition dirs>/<part file>``, unique by the commit
+    uuid even though ``partitionBy`` reuses part-file basenames across
+    partition dirs) and ``__pos`` (the row's index WITHIN its file,
+    Spark's ``_metadata.row_index``) — the row identity positional
+    deletion vectors anchor to."""
     from pyspark.sql.types import StructType
 
     cmap = _col_map(schema_json)
@@ -909,7 +911,7 @@ def _m_open_files(
         return df.withColumns(
             {
                 "__fname": F.regexp_extract(
-                    F.col("_metadata.file_path"), "/data/(.*)$", 1
+                    F.col("_metadata.file_path"), _FILE_KEY_RE, 1
                 ),
                 "__pos": F.col("_metadata.row_index"),
             }
@@ -1266,6 +1268,57 @@ def _m_snapshot(spark: SparkSession, path: str, version: int) -> DataFrame:
     return df
 
 
+def _m_delete_inputs(
+    spark: SparkSession, path: str, entries: list[dict], m: dict
+) -> tuple | None:
+    """Decode the manifest's pending deletes into the inputs of the
+    :mod:`~spype_spark.row_deletes` kernel (its positional arguments),
+    over ONE position-aware scan of ``entries``. None when no delete
+    record reaches a listed entry (or none is listed).
+
+    A record reaches the entries whose seq is at most its ``reach``
+    (:func:`manifest_log.m_delete_recs`). For a key file that is
+    ``seq - 1``, the entries of OLDER commits. That is what lets a
+    MERGE re-insert a deleted key without the old tombstone swallowing
+    the new row: rewritten and inserted files get the new commit's seq
+    (Iceberg's sequence-number semantics). Key files drop their
+    NULL-key rows, so the kernel's null-safe match keeps this format's
+    rule that NULL-keyed rows are never matched.
+
+    Positional rows get no per-row seq test: a DV names only files
+    live at its base version, and no later file reuses a recorded key
+    (a commit-uuid directory, or a whole absolute path). Its ``reach``
+    only prunes records that name no listed entry."""
+    if not entries:
+        return None
+    floor = min(int(e.get("seq", 0)) for e in entries)
+    recs = [r for r in _m_delete_recs(path, m) if r["reach"] >= floor]
+    if not recs:
+        return None
+    pos = [r["path"] for r in recs if r["kind"] == "pos"]
+    eq = [
+        (
+            r["keys"],
+            F.broadcast(
+                spark.read.parquet(r["path"]).select(*r["keys"]).dropna()
+            ),
+            r["reach"],
+        )
+        for r in recs
+        if r["kind"] == "eq"
+    ]
+    scan = _m_open_files(
+        spark, path, [e["path"] for e in entries], m["schema"], True
+    )
+    if pos:
+        pos = F.broadcast(spark.read.schema(_DV_SCHEMA).parquet(*pos))
+    seqs = [
+        (_m_file_key(os.path.join(path, e["path"])), int(e.get("seq", 0)))
+        for e in entries
+    ]
+    return scan, "__fname", "__pos", pos or None, eq, seqs if eq else []
+
+
 def _m_apply_deletes(
     spark: SparkSession,
     path: str,
@@ -1273,18 +1326,11 @@ def _m_apply_deletes(
     m: dict,
     with_pos: bool = False,
 ) -> DataFrame:
-    """DataFrame over ``entries`` with the manifest's equality-delete
-    files applied by the SEQUENCE rule: a delete (seq = the version
-    that recorded it) filters only data entries with a SMALLER seq.
-    That is what lets a MERGE re-insert a previously deleted key
-    without the old tombstone swallowing the new row — rewritten and
-    inserted files get the new commit's seq, so no earlier delete can
-    touch them (Iceberg's sequence-number semantics).
-
-    Execution shape: entries group by their seq (≤ one group per
-    commit since the last compaction); each group anti-joins the
-    BROADCAST key files whose seq exceeds it. No shuffle — the scan
-    plan stays a union of filtered file reads.
+    """DataFrame over ``entries`` with the manifest's pending deletes
+    applied (see :func:`_m_delete_inputs` for the rule): one scan of
+    every entry, anti-joined once per delete input. When no delete
+    reaches a listed entry it is the plain scan, with no metadata column
+    unless ``with_pos``.
 
     Explicit leaf-file reads throughout: no partition discovery
     (partition columns are IN the files), explicit schema (absent
@@ -1293,59 +1339,23 @@ def _m_apply_deletes(
 
     ``with_pos=True`` KEEPS the ``__fname`` / ``__pos`` row-identity
     columns (see :func:`_m_open_files`) on every row — the input a
-    positional-DV writer needs. Without it a group with no pending DV
-    reads no metadata column at all (the plan of every table read)."""
+    positional-DV writer needs."""
     from pyspark.sql.types import StructType
 
     if not entries:
-        # limit(0): an empty relation the optimizer answers (and prunes
-        # joins against) without launching a job
-        df = spark.createDataFrame([], StructType.fromJson(m["schema"]))
-        if with_pos:
-            df = df.withColumns(
-                {
-                    "__fname": F.lit(None).cast("string"),
-                    "__pos": F.lit(None).cast("long"),
-                }
-            )
-        return df.limit(0)
-    dels = m.get("deletes", [])
-    pdels = m.get("pos_deletes", [])
-    cols = [f["name"] for f in m["schema"]["fields"]]
-
-    def _read(paths, pos):
-        return _m_open_files(spark, path, paths, m["schema"], pos)
-
-    if not dels and not pdels:
-        return _read([e["path"] for e in entries], with_pos)
-    groups: dict[int, list[str]] = {}
-    for e in entries:
-        groups.setdefault(e.get("seq", 0), []).append(e["path"])
-    out = None
-    for s in sorted(groups):
-        # positional DVs first: they anchor to (file basename, row
-        # index), so the filter must see the metadata columns before
-        # any other operator; same sequence rule as equality deletes
-        # (a DV only targets files from OLDER commits)
-        pd_here = [d for d in pdels if d["seq"] > s]
-        df = _read(groups[s], with_pos or bool(pd_here))
-        if pd_here:
-            dv = spark.read.schema(_DV_SCHEMA).parquet(
-                *[os.path.join(path, d["path"]) for d in pd_here]
-            ).select(
-                F.col("fname").alias("__fname"), F.col("pos").alias("__pos")
-            )
-            df = df.join(F.broadcast(dv), ["__fname", "__pos"], "left_anti")
-            if not with_pos:
-                df = df.select(*cols)
-        for d in dels:
-            if d["seq"] > s:
-                kdf = spark.read.parquet(
-                    os.path.join(path, d["path"])
-                ).select(*d["keys"])
-                df = df.join(F.broadcast(kdf), d["keys"], "left_anti")
-        out = df if out is None else out.unionByName(df)
-    return out
+        return row_deletes.empty_scan(
+            spark, StructType.fromJson(m["schema"]),
+            *(("__fname", "__pos") if with_pos else ()),
+        )
+    inputs = _m_delete_inputs(spark, path, entries, m)
+    if inputs is None:
+        return _m_open_files(
+            spark, path, [e["path"] for e in entries], m["schema"], with_pos
+        )
+    df = row_deletes.live_rows(*inputs)
+    if with_pos:
+        return df
+    return df.select(*[f["name"] for f in m["schema"]["fields"]])
 
 
 def _m_entry_key(entry: dict, pcols: list[str]) -> tuple:
@@ -3579,11 +3589,14 @@ def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame) -> int:
     :func:`delete_where` would rewrite every file that holds one
     matched row. Readers apply deletes by SEQUENCE: a delete filters
     only data files from OLDER commits, so a later MERGE re-inserting
-    a deleted key is not swallowed by the old tombstone. Read overhead
-    is one broadcast anti-join per pending delete file;
-    :func:`compact` materializes and clears them (the read/write
-    trade every merge-on-read format documents). NULL-keyed rows are
-    never matched (SQL anti-join semantics).
+    a deleted key is not swallowed by the old tombstone. Read overhead,
+    while key files are pending, is one broadcast join of the file →
+    seq map onto the table's single scan plus one broadcast anti-join
+    per key file (:mod:`spype_spark.row_deletes`); :func:`compact`
+    materializes and clears them (the read/write trade every
+    merge-on-read format documents). NULL-keyed rows are never matched:
+    readers drop key tuples holding a NULL (SQL anti-join semantics,
+    unlike Iceberg's null-safe equality deletes).
     """
     return _m_run(spark, path, _m_keys_plan, keys_df)
 
@@ -3617,16 +3630,19 @@ def delete_where_dv(spark: SparkSession, path: str, cond) -> int:
     rows are KEPT (SQL DELETE semantics — only TRUE rows are marked).
 
     Row identity is Spark's ``_metadata.row_index`` within each
-    immutable file, keyed by the file's COMMIT-RELATIVE path (unique
-    by commit uuid — partitionBy reuses part basenames across
-    partition dirs — and invariant under table moves, clones, and
-    branches because it never names the table root). Readers apply DVs by
-    the same SEQUENCE rule as equality deletes: a DV only filters data
-    files from OLDER commits, so later rewrites/inserts are never
-    swallowed. Read overhead is one broadcast anti-join while DVs are
-    pending; :func:`compact` materializes and clears them. DVs compose
-    with equality deletes, column mapping, and hidden partitioning
-    (the DV is column-agnostic). Returns the new version."""
+    immutable file, keyed by :func:`manifest_log.m_file_key` — the
+    file's COMMIT-RELATIVE path (unique by commit uuid — partitionBy
+    reuses part basenames across partition dirs — and invariant under
+    clones and branches). A DV only names files live at its base
+    version, so it never reaches a later rewrite or insert (the
+    sequence rule holds with no per-row seq test); it records the
+    highest seq among them, which on a branch can exceed its own.
+    Read overhead, while DVs are pending, is one read of every DV
+    sidecar and one broadcast anti-join on (file, position) over the
+    table's single scan (:mod:`spype_spark.row_deletes`);
+    :func:`compact` materializes and clears them. DVs compose with
+    equality deletes, column mapping, and hidden partitioning (the DV
+    is column-agnostic). Returns the new version."""
     return _m_run(spark, path, _m_dv_plan, cond)
 
 
@@ -3643,7 +3659,12 @@ def _m_dv_plan(spark: SparkSession, path: str, base: int, cond) -> _Plan:
     matches = live.filter(cond).select(
         F.col("__fname").alias("fname"), F.col("__pos").alias("pos")
     )
-    ddir, recs = _m_write_sidecar(matches, path, base)
+    # reach: on a branch, fork-carried entries keep the parent's seqs,
+    # which can exceed this DV's branch-local seq
+    ddir, recs = _m_write_sidecar(
+        matches, path, base,
+        reach=max(int(e.get("seq", 0)) for e in entries) if entries else 0,
+    )
     return _Plan(
         None, entries, m, {"name": "DELETE", "dataChange": True},
         mode="*", pos_deletes=m.get("pos_deletes", []) + recs, sidecar=ddir,

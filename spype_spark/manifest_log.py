@@ -198,14 +198,22 @@ def col_map(schema_json: dict) -> dict[str, str]:
 def m_delete_recs(path: str, m: dict) -> list[dict]:
     """Delete-state records of one manifest: sidecar path under the
     table root (absolute when the manifest lists it so), kind (``eq``
-    equality-delete keys / ``pos`` positional DV) and the commit seq
-    the sequence rule filters by."""
+    equality-delete keys / ``pos`` positional DV), the commit seq, and
+    ``reach``: the highest data-file seq the record can touch.
+
+    An equality delete reaches the files of OLDER commits (``seq - 1``,
+    the sequence rule). A DV names only files live at its base; its
+    writer records the highest seq among them, because on a branch the
+    fork-carried files keep the parent's seqs, which can exceed the
+    branch-local seq of the DV that names them (a DV record written
+    without a ``reach`` falls back to ``seq - 1``)."""
     recs = [
         {
             "path": os.path.join(path, d["path"]),
             "kind": "eq",
             "keys": list(d["keys"]),
             "seq": int(d["seq"]),
+            "reach": int(d["seq"]) - 1,
         }
         for d in m.get("deletes") or []
     ]
@@ -214,6 +222,7 @@ def m_delete_recs(path: str, m: dict) -> list[dict]:
             "path": os.path.join(path, d["path"]),
             "kind": "pos",
             "seq": int(d["seq"]),
+            "reach": int(d.get("reach", int(d["seq"]) - 1)),
         }
         for d in m.get("pos_deletes") or []
     ]
@@ -221,10 +230,48 @@ def m_delete_recs(path: str, m: dict) -> list[dict]:
 
 
 def m_applicable(recs: list[dict], entry: dict) -> list[dict]:
-    """The delete records that apply to ``entry`` by the sequence rule:
-    those recorded after the commit that wrote it."""
+    """The delete records that can touch ``entry``: those whose
+    ``reach`` covers the seq of the commit that wrote it."""
     s = int(entry.get("seq", 0))
-    return [r for r in recs if r["seq"] > s]
+    return [r for r in recs if r["reach"] >= s]
+
+
+#: Spark spelling of the file key: ``regexp_extract(_metadata.file_path,
+#: FILE_KEY_RE, 1)`` (``lakehouse._m_open_files``). The first branch
+#: keeps what follows the first ``/data/``; the second strips the URI
+#: scheme (and authority) of a path with none, leaving it absolute.
+FILE_KEY_RE = r"^(?:.*?/data/|[A-Za-z][A-Za-z0-9+.-]*:(?://[^/]*)?)(.*)$"
+
+# characters java.net.URI leaves unquoted in a path (unreserved, ":@&=+$,"
+# and ";" "/"); Spark's _metadata.file_path spells paths that way
+_URI_PATH_SAFE = frozenset(
+    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+    "-_.!~*'():@&=+$,;/"
+)
+
+
+def m_file_key(file_path: str) -> str:
+    """The row-identity key positional deletes anchor to: everything
+    after the FIRST ``/data/`` of the file's absolute path, spelled as
+    Spark's ``_metadata.file_path`` spells it (URI-quoted: a space reads
+    ``%20``, a ``%`` reads ``%25``). Normally that is the file's
+    COMMIT-RELATIVE path ``<commit-uuid>/<partition dirs>/<part file>``,
+    unique by the commit uuid and invariant under clones and branches.
+    A file outside any ``data/`` tree (a by-reference import of an
+    unpartitioned Delta table) keys by its whole absolute path, so
+    every listed file keeps a key of its own. The Python twin of
+    :data:`FILE_KEY_RE`: the scan, the delete kernel's seq map, the
+    CDF sink and ``export_delta`` all key files by it."""
+    q = os.path.abspath(file_path)
+    if not _URI_PATH_SAFE.issuperset(q):
+        q = "".join(
+            ch
+            if ch in _URI_PATH_SAFE
+            or (ord(ch) > 127 and ch.isprintable() and not ch.isspace())
+            else "".join("%%%02X" % b for b in ch.encode())
+            for ch in q
+        )
+    return q.split("/data/", 1)[1] if "/data/" in q else q
 
 
 def m_step_files(

@@ -1,7 +1,7 @@
 """Guard against dead private names in the lakehouse engine modules.
 
-Every module-level private name of ``spype_spark/lakehouse.py`` and
-``spype_spark/catalog.py`` -- a ``def``, a ``class`` or an import alias
+Every module-level private name of the lakehouse engine and interop
+modules (``_GUARDED``) -- a ``def``, a ``class`` or an import alias
 starting with ``_`` -- must be referenced somewhere in the repo's code
 (``spype_spark/``, ``tests/``, ``tools/``, ``perfbench/``). A reference
 is a Python identifier use (a name, an attribute or an imported name)
@@ -16,7 +16,12 @@ import os
 import pytest
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_GUARDED = ("spype_spark/lakehouse.py", "spype_spark/catalog.py")
+_GUARDED = (
+    "spype_spark/lakehouse.py",
+    "spype_spark/catalog.py",
+    "spype_spark/delta_interop.py",
+    "spype_spark/iceberg_interop.py",
+)
 _SEARCHED = ("spype_spark", "tests", "tools", "perfbench")
 
 #: Private names allowed to stand without a reference, each with a
